@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** THE bench consume path — noop-format sink, NEVER count() (round-13,
     * the x13/x348 finding: a bare count() lets Catalyst eliminate any
@@ -14,13 +13,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Tuning.adaptive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.core.Tuning.session()
     spark.sparkContext.setLogLevel("WARN")
     // Per-query JIT/codegen warmup at the tiny sf0.001, IMMEDIATELY before
     // timing that query at the measured SF. A single bulk warmup pass does

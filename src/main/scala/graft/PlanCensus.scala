@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
 
 /** Round-15 measurement tool (optimization guide §1 / §7.2): one line per
   * declared query with physical-plan shape counts — parquet scans,
@@ -13,26 +14,26 @@ import org.apache.spark.sql.SparkSession
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4).
   */
 object PlanCensus {
+  // Anchored node-header counts (ADVICE r15): count "(n) NodeKind" detail
+  // headers so each column counts exactly one node kind — a bare
+  // "Exchange" regex also matched BroadcastExchange/ReusedExchange and
+  // "Subquery" matched SubqueryBroadcast, inflating the shuffle ranks.
+  def count(plan: String, node: String): Int =
+    ("""(?m)^\(\d+\) """ + node + """($| )""").r.findAllIn(plan).size
+
+  /** Subqueries are not numbered nodes: formatted explain prints each one
+    * as a `Subquery:N Hosting operator …` section header. */
+  def subqueries(plan: String): Int =
+    """(?m)^Subquery:\d+ Hosting """.r.findAllIn(plan).size
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Tuning.adaptive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.core.Tuning.session()
     spark.sparkContext.setLogLevel("ERROR")
     val names = args.toSeq match {
       case Nil => SparkEntry.queries.keys.toSeq.sorted
       case xs  => xs
     }
-    // Anchored node-header counts (ADVICE r15): count "(n) NodeKind" detail
-    // headers so each column counts exactly one node kind — a bare
-    // "Exchange" regex also matched BroadcastExchange/ReusedExchange and
-    // "Subquery" matched SubqueryBroadcast, inflating the shuffle ranks.
-    def count(p: String, node: String): Int =
-      ("""(?m)^\(\d+\) """ + node + """($| )""").r.findAllIn(p).size
     println("query\tlines\tscans\texchanges\tsmj\tbhj\tinmem\tsubqueries")
     for (name <- names) {
       val line = try {
@@ -42,8 +43,8 @@ object PlanCensus {
         Seq(name, p.linesIterator.size, count(p, "Scan parquet"),
           count(p, "Exchange"), count(p, "SortMergeJoin"),
           count(p, "BroadcastHashJoin"), count(p, "InMemoryTableScan"),
-          count(p, "Subquery")).mkString("\t")
-      } catch { case e: Throwable =>
+          subqueries(p)).mkString("\t")
+      } catch { case NonFatal(e) =>
         s"$name\tERROR\t${e.getClass.getSimpleName}"
       }
       println(line)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Round-15 deliverable helper: write `.explain("formatted")` output for
@@ -31,13 +30,7 @@ object PlanDump {
       sys.exit(2)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Tuning.adaptive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.core.Tuning.session()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = Paths.get(s"plans/$tag")
     Files.createDirectories(dir)

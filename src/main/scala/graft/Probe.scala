@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Declared scale-probe main (verdict r10 #1): the SURVEY §6.1 10×/100×
   * probes as ONE `runMain graft.Probe`, emitting a machine-readable
@@ -73,11 +74,7 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Tuning.adaptive(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = graft.core.Tuning.session("32")
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val tenDir = sys.env.getOrElse("GRAFT_PROBE_10X", "/tmp/probe10x_r9")
@@ -457,7 +454,7 @@ object Probe {
       try { // codegen-warm both shapes outside the timing (Bench rule)
         consumed(queries.Round14Queries.x356EpochShuffle(spark, warmDir))
         consumed(queries.Round13Queries.x354Lof(spark, warmDir))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
       run("x356_contention", hundredDir) {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
         implicit val ec =
@@ -512,7 +509,7 @@ object Probe {
     try {
       val w = new java.io.PrintWriter(artifact, "UTF-8")
       try w.println(json) finally w.close()
-    } catch { case _: Throwable => () } // read-only CWD must not fail the probe
+    } catch { case NonFatal(_) => () } // read-only CWD must not fail the probe
     println(json.take(4000))
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** One-shot harness-honesty audit (round-13; the x348 lesson): the bench
   * metric is `count()`, and Catalyst may legally ELIMINATE subtrees a
@@ -26,10 +26,7 @@ object PruneAudit {
       n.nodeName.contains("Aggregate") => 1 }.sum
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.Tuning.session("8")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     def score(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
@@ -45,7 +42,7 @@ object PruneAudit {
           println(f"PRUNE $name%-30s full=$full%3d counted=$counted%3d")
         }
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           println(s"ERR   $name: ${String.valueOf(e.getMessage).take(100)}")
       }
     }

@@ -36,14 +36,8 @@ object PipelineMain {
     val curatedDir = sys.env.getOrElse("CURATED_DIR", "curated")
     val pre        = sys.env.getOrElse("MIN_CONFORMITY_PRE", "0.98").toDouble
     val post       = sys.env.getOrElse("MIN_CONFORMITY_POST", "0.995").toDouble
-    val cpus       = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Tuning.session()
     spark.sparkContext.setLogLevel("WARN")
     val rc = runCli(spark, inputCsv, dataDir, curatedDir, pre, post)
     spark.stop()

@@ -43,4 +43,15 @@ object Tuning {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes", v))
       .getOrElse(withPf)
   }
+
+  /** The one SparkSession every main builds: local[cpus] with as many
+    * shuffle partitions, UTC session time, UI off, plus the env-gated AQE
+    * knobs above. `cpus` defaults to SPARK_GRAFT_CPUS, else 4. */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession =
+    adaptive(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
 }

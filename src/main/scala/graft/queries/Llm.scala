@@ -1517,34 +1517,11 @@ object LlmQueries {
       }
     }
 
-  /** Fixture stamp: part-file count + max mtime + total bytes of the
-    * documents fixture. Any driver-side regeneration (rewrite, vintage
-    * swap, cardinality change) moves at least one of the three, so a
-    * stale fixpoint can never be served against fresh data. Walked with
-    * the Hadoop FileSystem API (advice r10): a java.io.File walk stamps
-    * every non-local sfDir (hdfs://, s3a://) as 0|0|0, and an in-place
-    * regen there would serve a stale memoized fixpoint. An unstampable
-    * dir (no files, or a filesystem error) returns a nonce so that call
-    * can never produce — or hit — a memo entry. */
-  private def docsStamp(spark: SparkSession, sfDir: String): String =
-    try {
-      val path = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(path, true) // recursive: partitioned fixtures
-      var n = 0L; var maxM = 0L; var bytes = 0L
-      while (it.hasNext) {
-        val s = it.next()
-        n += 1; maxM = math.max(maxM, s.getModificationTime); bytes += s.getLen
-      }
-      if (n == 0) s"nofiles|${System.nanoTime()}"
-      else s"$n|$maxM|$bytes"
-    } catch { case _: Throwable => s"nostamp|${System.nanoTime()}" }
-
   /** The converged component labels for `sfDir` — memoized (see
     * [[componentMemo]]). Returns a PERSISTED, already-forced frame owned
     * by the memo; callers must NOT repin or unpersist it. */
   private def convergedLabels(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"$sfDir|${docsStamp(spark, sfDir)}"
+    val key = s"$sfDir|${Io.fixtureStamp(spark, sfDir, "documents")}"
     componentMemo.synchronized {
       val cur = componentMemo.get(key)
       if (cur != null && (cur._1.sparkSession eq spark) &&

@@ -6877,358 +6877,10 @@ object Oracles {
       |              AND f.raw_f = d.raw_bytes
       |ORDER BY d.source""".stripMargin
 
-  val lGroup: Map[String, String] = Map(
-    "x262_compress_ratio"    -> x262,
-    "x106_multimodal_golden" -> x106,
-    "x135_binary_ingest"     -> x135,
-    "x204_av_align"          -> x204,
-    "x203_calendar_heatmap"  -> x203,
-    "x305_char_coverage"     -> x305,
-    "x304_stopword_chi2"     -> x304,
-    "x303_oov_rate"          -> x303,
-    "x302_markov_stationary" -> x302,
-    "x301_zipf_mandelbrot"   -> x301,
-    "x300_hash_ring"         -> x300,
-    "x299_inter_arrival"     -> x299,
-    "x298_cluster_purity"    -> x298,
-    "x297_wasserstein"       -> x297,
-    "x296_l_diversity"       -> x296,
-    "x295_hll16"             -> x295,
-    "x294_winnowing"         -> x294,
-    "x293_kcenter"           -> x293,
-    "x292_calibration_ece"   -> x292,
-    "x291_kendall_tau"       -> x291,
-    "x290_es_sample"         -> x290,
-    "x289_jl_distortion"     -> x289,
-    "x288_temp_sweep"        -> x288,
-    "x287_dedup_savings"     -> x287,
-    "x286_fleiss_kappa"      -> x286,
-    "x285_source_xent"       -> x285,
-    "x284_theil_index"       -> x284,
-    "x282_brown_forsythe"    -> x282,
-    "x281_data_constrained"  -> x281,
-    "x280_fellegi_sunter"    -> x280,
-    "x283_systematic_sample" -> x283,
-    "x279_flesch_source"     -> x279,
-    "x278_ams_f2"            -> x278,
-    "x277_triangle_census"   -> x277,
-    "x276_weighted_jaccard"  -> x276,
-    "x275_dup_by_length"     -> x275,
-    "x274_good_turing"       -> x274,
-    "x273_fd_histogram"      -> x273,
-    "x272_shard_balance"     -> x272,
-    "x271_lsh_fp_audit"      -> x271,
-    "x270_stride_windows"    -> x270,
-    "x269_dup_leakage"       -> x269,
-    "x268_burstiness"        -> x268,
-    "x267_pmi_collocations"  -> x267,
-    "x266_cohen_kappa"       -> x266,
-    "x265_mix_ess"           -> x265,
-    "x264_decay_volume"      -> x264,
-    "x263_exact_quantiles"   -> x263,
-    "x261_ngram_coverage"    -> x261,
-    "x260_bpe_train5"        -> x260,
-    "x259_assortativity"     -> x259,
-    "x258_doremi_step"       -> x258,
-    "x257_matryoshka_recall" -> x257,
-    "x256_rep_5gram"         -> x256,
-    "x255_hash_uniformity"   -> x255,
-    "x254_hill_tail"         -> x254,
-    "x253_wilson_ci"         -> x253,
-    "x252_image_dhash"       -> x252,
-    "x251_heaps_law"         -> x251,
-    "x250_kneser_ney"        -> x250,
-    "x249_chunk_pool"        -> x249,
-    "x248_negative_sampling" -> x248,
-    "x247_seq_trigrams"      -> x247,
-    "x246_dp_release"        -> x246,
-    "x245_tokenizer_fertility" -> x245,
-    "x244_psi_drift"         -> x244,
-    "x243_bootstrap_ci"      -> x243,
-    "x242_welch_ttest"       -> x242,
-    "x241_kmv_distinct"      -> x241,
-    "x240_langid_metrics"    -> x240,
-    "x239_zipf_slope"        -> x239,
-    "x238_component_sizes"   -> x238,
-    "x237_norm_histogram"    -> x237,
-    "x236_audio_samples"     -> x236,
-    "x235_image_pixels"      -> x235,
-    "x234_sql_scripting"     -> x234,
-    "x233_identifier_clause" -> x233,
-    "x232_column_defaults"   -> x232,
-    "x231_cached_reuse"      -> x231,
-    "x230_analyze_cbo"       -> x230,
-    "x229_group_by_all"      -> x229,
-    "x228_dynamic_sessions"  -> x228,
-    // x227 shares x220's oracle VERBATIM (the x92/x91 pattern): the
-    // two-pass range-partitioned ranking must reproduce the window's
-    // ntile/percent_rank/cume_dist boundary for boundary.
-    "x227_range_rank"        -> x220,
-    "x226_outer_join_replay" -> x226,
-    "x225_state_bootstrap"   -> x225,
-    "x224_join_hints"        -> x224,
-    "x223_sql_variables"     -> x223,
-    "x222_collation"         -> x222,
-    "x221_pipe_sql"          -> x221,
-    "x220_window_rank_family" -> x220,
-    "x219_bigram_entropy_rate" -> x219,
-    "x218_gini"              -> x218,
-    "x217_k_anonymity"       -> x217,
-    "x216_dup_quality_corr"  -> x216,
-    "x215_jsd_sources"       -> x215,
-    "x214_embedding_profile" -> x214,
-    "x213_logistic_quality"  -> x213,
-    "x212_conversation_dedup" -> x212,
-    "x211_graph_backbone"    -> x211,
-    "x210_param_sql"         -> x210,
-    "x209_lateral_topk"      -> x209,
-    "x208_acf"               -> x208,
-    "x207_cusum"             -> x207,
-    "x206_kruskal_wallis"    -> x206,
-    "x205_spearman"          -> x205,
-    "x202_mann_whitney"      -> x202,
-    "x201_benford"           -> x201,
-    "x200_stream_dedup_native" -> x200,
-    "x199_prep_v5"           -> x199,
-    "x198_range_window"      -> x198,
-    "x197_typed_udaf"        -> x197,
-    "x196_observe"           -> x196,
-    "x195_state_profile"     -> x195,
-    "x194_timer_sessions"    -> x194,
-    "x193_chi2_independence" -> x193,
-    "x192_multi_match"       -> x192,
-    "x191_budget_gate"       -> x191,
-    "x187_sql_udf"           -> x187,
-    "x188_sql_tvf"           -> x188,
-    "x189_state_inspect"     -> x189,
-    "x190_takedown_delete"   -> x190,
-    "x183_recursive_chunks"  -> x183,
-    "x184_bloom_join"        -> x184,
-    "x185_dsv2_agg_pushdown" -> x185,
-    "x186_join_forecast"     -> x186,
-    "x182_dynamic_overwrite" -> x182,
-    "x178_filter_bank"    -> x178,
-    "x179_lsh_scurve"     -> x179,
-    "x180_range_balance"  -> x180,
-    "x181_ngram_novelty"  -> x181,
-    "x174_skew_audit"     -> x174,
-    "x175_collocations"   -> x175,
-    "x176_dataset_card"   -> x176,
-    "x177_bm25"           -> x177,
-    "x171_bucketed_agg"   -> x171,
-    "x172_union_by_name"  -> x172,
-    // x173 shares x24's oracle: the dynamically discovered-and-sorted
-    // pivot columns must equal the static value list exactly.
-    "x173_pivot_dynamic"  -> x24,
-    "x170_textrank"       -> x170,
-    // x169 shares x47's oracle VERBATIM: the recursive-CTE recompute knows
-    // nothing about restarts, so the hash match proves the interrupted →
-    // checkpointed → cold-resumed fixpoint reaches the identical answer.
-    "x169_fixpoint_restart" -> x47,
-    "x167_late_data_audit" -> x167,
-    // x168 shares x40's oracle (the x58 pattern): aggregate the ORIGINAL
-    // parquet — the hash match proves the quoted-newline CSV cycle lossless.
-    "x168_csv_roundtrip"  -> x40,
-    "x166_session_window" -> x166,
-    "x165_hopping_window" -> x165,
-    "x164_corrupt_quarantine" -> x164,
-    // x163 shares x48's oracle VERBATIM (the x8b/x58 pattern): the
-    // recompute SQL knows nothing about restarts, so the hash match proves
-    // state -> parquet -> cold read -> assignment == the in-memory chain.
-    "x163_dedup_restart"  -> x48,
-    "x162_mv_maintain"    -> x162,
-    "x161_throttle_dedup" -> x161,
-    "x160_interval_join_replay" -> x160,
-    "x159_padding_audit"  -> x159,
-    "x158_fk_audit"       -> x158,
-    "x157_rejection_sample" -> x157,
-    "x156_epoch_shuffle"  -> x156,
-    "x155_curriculum"     -> x155,
-    "x154_window_replay"  -> x154,
-    "x153_dedup_sql"      -> x153,
-    "x152_char_trigrams"  -> x152,
-    "x150_hard_negatives" -> x150,
-    "x147_detokenize"   -> x147,
-    "x113_tokenize_ids" -> x113,
-    "x109_schema_audit" -> x109,
-    "x110_walkforward_split" -> x110,
-    "x111_rrf_fusion" -> x111,
-    "x107_chunk_dedup_clean" -> x107,
-    "x108_token_budget_mix" -> x108,
-    "x100_centroid_drift" -> x100,
-    "x101_token_entropy"  -> x101,
-    "x104_split_assign"   -> x104,
-    "x105_recall_audit"   -> x105,
-    "x94_rag_chunks"      -> x94,
-    "x95_pareto_frontier" -> x95,
-    "x98_table_checksum"  -> x98,
-    "x89_dedup_agreement" -> x89,
-    "x88_term_lookup"     -> x88,
-    "x87_bigram_lm"       -> x87,
-    "x86_leakage_audit"   -> x86,
-    "x85_source_drift"    -> x85,
-    "x84_edit_gate"       -> x84,
-    "x83_sorted_neighborhood" -> x83,
-    "x82_quantile_norm"   -> x82,
-    "x80_weighted_sample" -> x80,
-    "x79_inverted_index"  -> x79,
-    "x71_snapshot_diff"   -> x71,
-    "x72_bpe_pairs"       -> x72,
-    "x67_source_overlap"  -> x67,
-    "x68_dup_rate_source" -> x68,
-    "x69_prep_v3"         -> x69,
-    "x59_semdedup"        -> x59,
-    "x60_sequence_pack"   -> x60,
-    "x62_minhash_estimate" -> x62,
-    "x64_pii_scrub"       -> x64,
-    "x65_vocab_coverage"  -> x65,
-    "x66_best_of_dupes"   -> x66,
-    "x63_rarity_score"    -> x63,
-    "x53_chunk_dedup"     -> x53,
-    "x54_domain_rebalance" -> x54,
-    "x55_lexical_diversity" -> x55,
-    "x56_knn_classify"    -> x56,
-    "x57_containment"     -> x57,
-    "x46_prep_v2"         -> x46,
-    "x51_adaptive_gate"   -> x51,
-    "x52_kmeans_step"     -> x52,
-    "x47_dedup_components" -> x47,
-    "x48_incremental_dedup" -> x48,
-    "x49_pq_ann"          -> x49,
-    "x50_tfidf_terms"     -> x50,
-    // x13b computes x13's exact output through the native minhash_all
-    // expression — the shared oracle pins the native hashes independently
-    "x13b_minhash_native" -> x13,
-    // x114 replays the streaming incremental near-dedup over a monotone
-    // 3-batch split, whose cumulative output equals batch x13 (the
-    // StreamingNearDedup parity contract) — its oracle is x13's minus the
-    // mh0 column the incremental path never materializes
-    "x114_stream_batch_parity" -> x114,
-    "x115_boilerplate_strip" -> x115,
-    "x40_jsonl_roundtrip" -> x40,
-    "x41_repetition"      -> x41,
-    "x42_stratified_sample" -> x42,
-    "x43_contamination"   -> x43,
-    "x13_minhash_neardup" -> x13,
-    "x14_text_stats"      -> x14,
-    "x15_language_id"     -> x15,
-    "x16_quality_score"   -> x16,
-    "x17_fingerprint"     -> x17,
-    "x18_token_count"     -> x18,
-    "x19_simhash"         -> x19,
-    "x20_jaccard_pairs"   -> x20,
-    "x21_ann_bucketed"    -> x21,
-    "x28_cosine_neardup"  -> x28,
-    "x30_hash_sample"     -> x30,
-    "x32_ivf_ann"         -> x32,
-    "x34_prep_pipeline"   -> x34,
-    "x35_simhash_pairs"   -> x35,
-    "x31_bigram_stats"    -> x31)
-
-  val xGroup: Map[String, String] = Map(
-    "x1_join_broadcast"   -> x1,
-    "x2_join_shuffle_agg" -> x2,
-    "x3_join_anti"        -> x3,
-    "x4_rollup"           -> x4,
-    "x5_window_running"   -> x5,
-    "x6_sessionize"       -> x6,
-    "x7_set_ops"          -> x7,
-    "x8_json_extract"     -> x8,
-    // x8b routes the same aggregate through Spark's native VARIANT type —
-    // the shared oracle pins the variant path independently (x13b pattern)
-    "x8b_variant_extract" -> x8,
-    "x9_text_tokens"      -> x9,
-    "x10_exact_dedup_hash" -> x10,
-    "x11_cosine_topk"     -> x11,
-    "x12_distinct"        -> x12,
-    "x22_asof_join"       -> x22,
-    "x23_cube"            -> x23,
-    "x24_pivot"           -> x24,
-    "x25_percentiles"     -> x25,
-    "x26_window_ranks"    -> x26,
-    "x27_part_supplier"   -> x27,
-    "x29_range_join"      -> x29,
-    "x33_salted_agg"      -> x33,
-    "x36_intersect"       -> x36,
-    "x37_semi_join"       -> x37,
-    "x38_grouping_sets"   -> x38,
-    "x39_full_outer"      -> x39,
-    "x44_moving_avg"      -> x44,
-    "x45_gap_fill"        -> x45,
-    // x58 re-routes x40's roundtrip aggregate through ORC parts — the
-    // shared original-parquet oracle proves THAT roundtrip lossless too
-    "x58_orc_roundtrip"   -> x40,
-    // x121 routes the same aggregate through the XML interchange cycle —
-    // the shared original-parquet oracle proves the roundtrip lossless
-    // (x40/x58's pattern)
-    "x121_xml_roundtrip"  -> x40,
-    "x139_text_roundtrip" -> x40,
-    "x146_dsv2_read"      -> x40,
-    "x151_dsv2_write"     -> x40,
-    // x149 runs x122's semantics through the window form under the
-    // TopKRewrite conf — same retained set, same oracle: one hash pins
-    // rule-rewritten plan == custom operator == declarative window
-    "x149_topk_rewrite"   -> x122,
-    "x61_merge_upsert"    -> x61,
-    "x70_scd2_history"    -> x70,
-    "x73_salted_join"     -> x73,
-    "x74_funnel"          -> x74,
-    "x75_retention"       -> x75,
-    "x76_bucketed_join"   -> x76,
-    "x77_partitioned_prune" -> x77,
-    "x78_compaction_roundtrip" -> x78,
-    "x81_burst_detect"    -> x81,
-    "x90_greedy_pack"     -> x90,
-    "x116_greedy_pack_full" -> x116,
-    "x117_mix_temperature" -> x117,
-    "x118_cdc_chunks"     -> x118,
-    "x119_prep_v4"        -> x119,
-    "x120_session_replay" -> x120,
-    "x122_topk_per_key"   -> x122,
-    "x123_bloom_contamination" -> x123,
-    "x124_dsir_weights"   -> x124,
-    "x125_schema_evolution" -> x125,
-    "x126_ks_drift"       -> x126,
-    "x127_quantize_audit" -> x127,
-    "x128_unpivot"        -> x128,
-    "x129_prefix_join"    -> x129,
-    // x130 replays the streaming top-k fold batch-wise — the final state
-    // must equal the batch operator's output, so it shares x122's oracle
-    // (stream == operator == window semantics in one hash)
-    "x130_topk_replay"    -> x122,
-    "x131_dup_spans"      -> x131,
-    "x132_perplexity_gate" -> x132,
-    "x133_reservoir_sample" -> x133,
-    "x134_unicode_norm"   -> x134,
-    "x136_cms_heavyhitters" -> x136,
-    "x137_spacesaving_terms" -> x137,
-    // x138 replays the streaming DQ gate's per-batch profile core over a
-    // 3-batch split and combines — additive counters make the cumulative
-    // profile provably equal to the one-shot batch profile, so it shares
-    // r2's oracle (stream gate == batch profile in one hash)
-    "x138_dq_replay"      -> r2,
-    "x140_retrieval_eval" -> x140,
-    "x141_interval_merge" -> x141,
-    "x142_dpp_prune"      -> x142,
-    "x143_ewma"           -> x143,
-    "x144_regression"     -> x144,
-    "x145_pack_blocks"    -> x145,
-    "x148_correlation"    -> x148,
-    "x91_nearest_event"   -> x91,
-    "x92_temporal_lookup" -> x92,
-    "x93_rolling_dau"     -> x93,
-    "x96_time_weighted"   -> x96,
-    "x97_mad_outliers"    -> x97,
-    "x99_markov_transitions" -> x99,
-    "x102_interval_overlap" -> x102,
-    "x112_zorder_layout"  -> x112)
-
   // x112: Morton interleave as a list-comprehension sum — identical exact
   // bit arithmetic to the Spark aggregate (epoch_ns//day matches `ts div`
   // on the eventsRaw ns-long view; all values positive so // truncates).
-  // lazy: defined after the xGroup map that references it — a plain val
-  // would be null at map-initialization time (the round-8 NPE class)
-  lazy val x112: String =
+  val x112: String =
     """WITH b AS (
       |  SELECT user_id % 65536 AS u,
       |         (epoch_ns(ts) // 86400000000000) % 65536 AS d
@@ -8771,16 +8423,6 @@ object Oracles {
       |WHERE NOT sc.is_cal
       |GROUP BY sc.event_type ORDER BY sc.event_type""".stripMargin
 
-  val r13Group: Map[String, String] = Map(
-    "x348_exact_substr_coverage" -> x348,
-    "x349_bradley_terry"         -> x349,
-    "x350_krippendorff_alpha"    -> x350,
-    "x351_int8_quant"            -> x351,
-    "x352_hopkins"               -> x352,
-    "x353_hrw_sharding"          -> x353,
-    "x354_lof"                   -> x354,
-    "x355_conformal_coverage"    -> x355)
-
   // x356: the identical md5-keyed permutation (lowercase-hex md5 of the
   // identical "<epoch>|<doc_id>" string on both engines, doc_id
   // tie-break), adjacency via the pos+1 self-join, unordered pair keys
@@ -9130,68 +8772,4 @@ object Oracles {
       |             / CAST(n * tot AS DOUBLE) * 1000000 + 0.5) / 1000000
       |         AS gini
       |FROM a WHERE tot > 0 ORDER BY source""".stripMargin
-
-  val r14Group: Map[String, String] = Map(
-    "x356_epoch_shuffle"       -> x356,
-    "x357_pack_contamination"  -> x357,
-    "x358_code_switch"         -> x358,
-    "x359_pack_frontier"       -> x359,
-    "x360_decontamination"     -> x360,
-    "x361_fragment_stitch"     -> x361,
-    "x362_repetition_loop"     -> x362,
-    "x363_anisotropy"          -> x363,
-    "x364_length_gini"         -> x364)
-
-  val r12Group: Map[String, String] = Map(
-    "x346_front_coding"       -> x346,
-    "x347_burrows_delta"      -> x347,
-    "x343_successor_entropy"  -> x343,
-    "x344_rank_biserial"      -> x344,
-    "x345_char_entropy"       -> x345,
-    "x337_gini_stump"         -> x337,
-    "x338_srm_check"          -> x338,
-    "x339_novelty_decay"      -> x339,
-    "x340_edit_histogram"     -> x340,
-    "x341_bigram_kl"          -> x341,
-    "x342_auc_rank"           -> x342,
-    "x327_krippendorff_alpha" -> x327,
-    "x328_gumbel_topk"        -> x328,
-    "x329_winsorized_mean"    -> x329,
-    "x330_poisson_dispersion" -> x330,
-    "x331_dow_seasonality"    -> x331,
-    "x332_jaccard_sweep"      -> x332,
-    "x333_minhash_k_sweep"    -> x333,
-    "x334_hhi_concentration"  -> x334,
-    "x335_bloom_fpr"          -> x335,
-    "x336_embedding_clip"     -> x336,
-    "x306_lexical_richness"   -> x306,
-    "x307_simpson"            -> x307,
-    "x308_mcnemar"            -> x308,
-    "x309_cramers_v"          -> x309,
-    "x310_mutual_information" -> x310,
-    "x311_vocab_lorenz"       -> x311,
-    "x312_runs_test"          -> x312,
-    "x313_ljung_box"          -> x313,
-    "x314_cochran_q"          -> x314,
-    "x315_hist_distances"     -> x315,
-    "x316_cliffs_delta"       -> x316,
-    "x317_priority_sample"    -> x317,
-    "x318_chao1"              -> x318,
-    "x319_pair_completeness"  -> x319,
-    "x320_distinct_n"         -> x320,
-    "x321_gopher_rules"       -> x321,
-    "x322_bbit_minhash"       -> x322,
-    "x323_mann_kendall"       -> x323,
-    "x324_durbin_watson"      -> x324,
-    "x325_neyman_allocation"  -> x325,
-    "x326_silhouette"         -> x326)
-
-  val rGroup: Map[String, String] = Map(
-    "r1_clean_standardize" -> r1,
-    "r2_dq_profile"        -> r2,
-    "r3_dedup_keep_first"  -> r3,
-    "r4_group_avg"         -> r4,
-    "r5_latest_per_key"    -> r5,
-    "r6_topk"              -> r6,
-    "r7_epoch_roundtrip"   -> r7)
 }
