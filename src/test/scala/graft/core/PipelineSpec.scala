@@ -1,8 +1,17 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan,
+  TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path}
+import org.apache.spark.sql.graft.CacheEntries
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.nio.file.{Files, Path, Paths}
 
 /** End-to-end flow over a synthesized dirty fraud CSV (FIXTURES.md §A):
   * pass branch, pre-gate fail branch (raw_snapshot then throw), post-gate
@@ -13,6 +22,55 @@ class PipelineSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  private def cachedEntries(): Int = CacheEntries.count(spark)
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** Physical plans of the SQL actions `body` runs, in execution order. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val marker = "pipeline_spec_marker"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // events arrive asynchronously but in order: once the marker
+      // action's event has arrived, so has every event before it
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      def arrived = plans.stream().anyMatch(_.output.exists(_.name == marker))
+      while (!arrived && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(arrived, "listener events did not arrive")
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+      .filterNot(_.output.exists(_.name == marker))
+  }
+
+  /** Each action's plan plus the cached plans it is the first to read. The
+    * first reader of a cache computes it; every action in the flow reads
+    * all partitions of what it scans, so it fills the whole cache.
+    */
+  private def computedPlans(plans: Seq[SparkPlan]): Seq[Seq[SparkPlan]] = {
+    val filled = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def expand(p: SparkPlan): Seq[SparkPlan] =
+      p +: Aqe.collect(p) { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+        .filter(filled.add).flatMap(expand)
+    plans.map(expand)
+  }
+
+  private def has(plans: Seq[SparkPlan])(pf: PartialFunction[SparkPlan, Boolean]): Boolean =
+    plans.exists(p => Aqe.find(p)(pf.applyOrElse(_, (_: SparkPlan) => false)).isDefined)
+
+  private val scansCsv: PartialFunction[SparkPlan, Boolean] = {
+    case s: FileSourceScanExec => s.relation.fileFormat.isInstanceOf[CSVFileFormat]
+  }
 
   /** 185 rows: 180 clean (epoch-ms timestamps), 2 duplicates of row 0's
     * composite key, 1 negative amount, 1 null amount, 1 unparseable amount.
@@ -41,7 +99,9 @@ class PipelineSpec extends SparkSpec {
   test("pass branch: clean, dedup, publish; named single-file CSV exports") {
     val in  = writePassCsv(Files.createTempDirectory("pipe_in"))
     val data = tmp("pipe_data"); val curated = tmp("pipe_curated")
+    val cached = cachedEntries()
     val res = Pipeline.run(spark, in, data, curated)
+    assert(cachedEntries() == cached) // every frame the run cached is released
 
     assert(res.dqPre.totalRows == 185)
     assert(res.dqPre.failedRowsEstimate == 3)
@@ -100,9 +160,11 @@ class PipelineSpec extends SparkSpec {
     // threshold config. Threshold > 1 exercises the publish-then-fail order.
     val in = writePassCsv(Files.createTempDirectory("pipe_in3"))
     val data = tmp("pipe_data3"); val curated = tmp("pipe_curated3")
+    val cached = cachedEntries()
     intercept[Quality.QualityGateException] {
       Pipeline.run(spark, in, data, curated, minConformityPost = 1.01)
     }
+    assert(cachedEntries() == cached)
     assert(new java.io.File(s"$data/stg_transactions").isDirectory)
     assert(new java.io.File(s"$curated/region_risk_avg.csv").isFile)
   }
@@ -136,5 +198,81 @@ class PipelineSpec extends SparkSpec {
     assert(PipelineMain.runCli(spark, "/nonexistent/nope.csv",
       tmp("d1"), tmp("c1"), 0.98, 0.995) == 1)
     assert(PipelineMain.runCli(spark, in, tmp("d2"), tmp("c2"), 1.01, 0.995) == 2)
+  }
+
+  test("pass branch computes the cleaned frame once; every output reads the cache") {
+    val in = writePassCsv(Files.createTempDirectory("pipe_once"))
+    val plans = executedPlans(Pipeline.run(spark, in, tmp("d_once"), tmp("c_once")))
+    val computed = computedPlans(plans)
+
+    // the two DQ profiles are the actions whose result has a "total" column
+    val profiles = plans.indices.filter(i => plans(i).output.exists(_.name == "total"))
+    assert(profiles.size == 2, s"expected pre and post profiles, got $profiles")
+    val Seq(pre, post) = profiles
+    assert(has(Seq(plans(pre)))(scansCsv))
+
+    // after the post profile nothing scans the CSV, not even through a
+    // cache it fills: each output reads the cached frames instead
+    val outputs = plans.indices.drop(post + 1)
+    assert(outputs.size == 6) // 4 parquet tables + 2 CSV exports
+    outputs.foreach { i =>
+      assert(!has(computed(i))(scansCsv), s"action $i rescans the CSV:\n${plans(i)}")
+      assert(has(Seq(plans(i))) { case _: InMemoryTableScanExec => true },
+        s"action $i reads no cached frame:\n${plans(i)}")
+    }
+
+    // Only the post profile scans the CSV and runs clean's keep-first
+    // window after the pre-gate. (The epoch-unit median inside clean also
+    // scans the CSV, for the raw timestamp column alone, before the cleaned
+    // frame exists.)
+    val keepFirst: PartialFunction[SparkPlan, Boolean] = {
+      case p if p.output.exists(_.name == "_kf_rn") => true
+    }
+    val cleans = plans.indices.drop(pre + 1)
+      .filter(i => has(computed(i))(scansCsv) && has(computed(i))(keepFirst))
+    assert(cleans == Seq(post))
+
+    // the region aggregate and the top-3 each run once, not once per sink
+    val regionAgg = plans.indices.filter(i => has(computed(i)) {
+      case a: BaseAggregateExec => a.output.exists(_.name == "avg_risk_score")
+    })
+    val top3 = plans.indices.filter(i => has(computed(i)) {
+      case _: TakeOrderedAndProjectExec => true
+    })
+    assert(regionAgg.size == 1, s"region aggregate ran in actions $regionAgg")
+    assert(top3.size == 1, s"top-3 ran in actions $top3")
+  }
+
+  test("empty CSV: the publish failure propagates and releases the cached frame") {
+    // A 0-byte file has no columns, so it passes both gates and fails in the
+    // region aggregate. runCli does not map that to an exit code: the
+    // exception escapes PipelineMain.main, which exits 1.
+    val in = Files.createTempDirectory("pipe_empty").resolve("empty.csv")
+    Files.write(in, Array.emptyByteArray)
+    val cached = cachedEntries()
+    val e = intercept[AnalysisException] {
+      PipelineMain.runCli(spark, in.toString, tmp("d_empty"), tmp("c_empty"), 0.98, 0.995)
+    }
+    assert(e.getMessage.contains("location_region"))
+    assert(cachedEntries() <= cached)
+  }
+
+  test("header-only CSV: exit 0, zero-row DQ JSONs, header-only CSV exports") {
+    val in = Files.createTempDirectory("pipe_hdronly").resolve("hdr_only.csv")
+    Files.writeString(in,
+      "timestamp,transaction_type,amount,receiving_address,location_region,risk_score\n")
+    val data = tmp("d_hdronly"); val curated = tmp("c_hdronly")
+    val cached = cachedEntries()
+    assert(PipelineMain.runCli(spark, in.toString, data, curated, 0.98, 0.995) == 0)
+    assert(cachedEntries() == cached)
+
+    Seq("dq_metrics_pre.json", "dq_metrics_post.json").foreach { f =>
+      assert(Files.readString(Paths.get(s"$data/$f")).contains("\"total_rows\": 0,"), f)
+    }
+    def lines(f: String) = Files.readAllLines(Paths.get(s"$curated/$f"))
+    assert(lines("region_risk_avg.csv") ==
+      java.util.List.of("location_region,avg_risk_score"))
+    assert(lines("top3_recent_sales_by_receiving.csv") ==
+      java.util.List.of("receiving_address,amount,timestamp"))
   }
 }
