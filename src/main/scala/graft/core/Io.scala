@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -30,7 +32,7 @@ object Io {
       try {
         val p = new org.apache.hadoop.fs.Path(old)
         p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-      } catch { case _: Exception => () }
+      } catch { case NonFatal(_) => () }
     }
     dir
   }
@@ -53,7 +55,7 @@ object Io {
       }
       if (n == 0) s"nofiles|${System.nanoTime()}"
       else s"$n|$maxM|$bytes"
-    } catch { case _: Throwable => s"nostamp|${System.nanoTime()}" }
+    } catch { case NonFatal(_) => s"nostamp|${System.nanoTime()}" }
 
   /** Memoized streaming-INPUT dir (verdict r12 #3): the streaming replay
     * queries write a deterministic projection of a fixture table to
@@ -105,7 +107,7 @@ object Io {
         try {
           val p = new org.apache.hadoop.fs.Path(prev._2)
           p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-        } catch { case _: Exception => () }
+        } catch { case NonFatal(_) => () }
       dir
     }
 
@@ -177,7 +179,7 @@ object Io {
     // needs it anyway (the x109 canary reports the vintage that round).
     try table(spark, sfDir, "events")
     catch {
-      case e: Throwable
+      case NonFatal(e)
           if String.valueOf(e.getMessage).contains("PARQUET_TYPE_ILLEGAL") =>
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         table(spark, sfDir, "events")

@@ -1,5 +1,8 @@
 package graft.core
 
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors,
+  Future, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,6 +20,23 @@ import org.apache.spark.sql.functions._
   * published output is derived from it, so a run scans and cleans the CSV
   * once after the pre-gate. Jobs run at CSV schema inference, the two DQ
   * profiles, clean's epoch-unit detection, and each published output.
+  *
+  * Actions that do not depend on each other run at the same time, from the
+  * threads of one pool the run owns (Spark schedules jobs submitted from
+  * separate threads of one application side by side):
+  *
+  *   - `clean(raw)`, whose only eager jobs are its epoch-unit probes over
+  *     the raw frame, runs beside the pre-clean profile;
+  *   - the six sinks (four parquet tables, two CSV exports) run together.
+  *
+  * The post-clean profile stays alone: it fills the cache the sinks read.
+  * Errors keep the sequential contract. The pre-gate decides first: on a
+  * breach `run` waits for `clean`, ignores its outcome, writes the raw
+  * snapshot and throws the gate's exception; an exception of the pre
+  * profile itself wins over `clean`'s. Otherwise the first failure in
+  * declared order is thrown (`clean`'s own exception, then the sinks in the
+  * order above, later sink failures attached with `addSuppressed`). `run`
+  * returns or throws only after every job it started has finished.
   */
 object Pipeline {
 
@@ -128,64 +148,93 @@ object Pipeline {
 
     val raw = ingestCsv(spark, inputCsv)
 
-    // DQ pre-gate runs on the RAW frame — before name normalization, so a
-    // CSV with "Timestamp " produces no timestamp rule (pipeline.py:232).
-    val dqPre = Quality.profile(raw.drop(Dedup.IngestIdCol), "pre_clean")
-    writeString(s"$dataDir/dq_metrics_pre.json", Quality.toJson(dqPre))
-    if (dqPre.conformityRate < minConformityPre) {
-      // publish a raw snapshot for inspection, THEN fail (pipeline.py:236-247)
-      raw.drop(Dedup.IngestIdCol).write.mode("overwrite").parquet(s"$dataDir/raw_snapshot")
-      Quality.gate(dqPre, minConformityPre)
-    }
-
-    // Cached with the ingest id still on it (lastSalePerAddress breaks ties
-    // on it): the post profile fills the cache, and every output below
-    // reads it instead of re-running the scan, parse, clean and keep-first
-    // shuffle. At 100 TB this would be a written staging table instead.
-    val staged = clean(raw).cache()
+    // Created here, so its threads inherit this thread's Spark local
+    // properties (job group, scheduler pool); drained before returning.
+    val pool = Executors.newCachedThreadPool()
     try {
-      val dqPost = Quality.profile(staged.drop(Dedup.IngestIdCol), "post_clean")
-      writeString(s"$dataDir/dq_metrics_post.json", Quality.toJson(dqPost))
+      // clean's eager jobs read only `raw`: they run beside the pre profile
+      val cleaned = pool.submit(new Callable[DataFrame] { def call() = clean(raw) })
 
-      val result = publish(staged, dataDir, curatedDir, dqPre, dqPost)
-      Quality.gate(dqPost, minConformityPost) // post-gate publishes FIRST, then fails
-      result
-    } finally staged.unpersist() // also when publish or the gate throws
+      // DQ pre-gate runs on the RAW frame — before name normalization, so a
+      // CSV with "Timestamp " produces no timestamp rule (pipeline.py:232).
+      val dqPre = Quality.profile(raw.drop(Dedup.IngestIdCol), "pre_clean")
+      writeString(s"$dataDir/dq_metrics_pre.json", Quality.toJson(dqPre))
+      if (dqPre.conformityRate < minConformityPre) {
+        failure(cleaned) // waited for; the gate's verdict wins over clean's
+        // publish a raw snapshot for inspection, THEN fail (pipeline.py:236-247)
+        raw.drop(Dedup.IngestIdCol).write.mode("overwrite").parquet(s"$dataDir/raw_snapshot")
+        Quality.gate(dqPre, minConformityPre)
+      }
+
+      failure(cleaned).foreach(e => throw e) // clean's own exception, unwrapped
+
+      // Cached with the ingest id still on it (lastSalePerAddress breaks
+      // ties on it): the post profile fills the cache, and every output
+      // below reads it instead of re-running the scan, parse, clean and
+      // keep-first shuffle. At 100 TB this would be a written staging table.
+      val staged = cleaned.get().cache()
+      try {
+        val dqPost = Quality.profile(staged.drop(Dedup.IngestIdCol), "post_clean")
+        writeString(s"$dataDir/dq_metrics_post.json", Quality.toJson(dqPost))
+
+        val result = publish(pool, staged, dataDir, curatedDir, dqPre, dqPost)
+        Quality.gate(dqPost, minConformityPost) // post-gate publishes FIRST, then fails
+        result
+      } finally staged.unpersist() // also when publish or the gate throws
+    } finally {
+      pool.shutdown()
+      while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
+    }
   }
 
   /** Writes the four tables and the two CSV exports from the cached
-    * `staged`. `region` and `top3` each feed a parquet table and a CSV
-    * export, so each is cached (both are small: one row per region, three
-    * rows) and computed once. The caches are released before returning;
-    * the Result's frames stay valid and recompute if used again.
+    * `staged`, all six at once. `region` and `top3` each feed a parquet
+    * table and a CSV export, so each is cached (both are small: one row per
+    * region, three rows) and computed once. The caches are released after
+    * every sink has finished; the Result's frames stay valid and recompute
+    * if used again.
     */
   private def publish(
+      pool: ExecutorService,
       staged: DataFrame,
       dataDir: String,
       curatedDir: String,
       dqPre: Quality.DqMetrics,
       dqPost: Quality.DqMetrics): Result = {
-    val stg = staged.drop(Dedup.IngestIdCol)
-    stg.write.mode("overwrite").parquet(s"$dataDir/stg_transactions")
-
+    val stg    = staged.drop(Dedup.IngestIdCol)
     val region = regionRiskAvg(stg)
     val last   = lastSalePerAddress(staged).drop(Dedup.IngestIdCol)
     val top3   = top3RecentSales(last)
     val shared = Seq(region, top3)
     shared.foreach(_.cache())
     try {
-      region.write.mode("overwrite").parquet(s"$dataDir/region_risk_avg")
-      last.write.mode("overwrite").parquet(s"$dataDir/last_sale_per_address")
-      top3.write.mode("overwrite").parquet(s"$dataDir/top3_recent_sales_by_receiving")
-
-      // S4 — single-file headered CSV exports with the reference's exact file
-      // names, order baked in (pipeline.py:214-215)
-      Io.writeSingleCsv(region, s"$curatedDir/region_risk_avg.csv")
-      Io.writeSingleCsv(top3, s"$curatedDir/top3_recent_sales_by_receiving.csv")
-
+      val sinks: Seq[Callable[Unit]] = Seq(
+        () => publishTable(stg, s"$dataDir/stg_transactions"),
+        () => publishTable(region, s"$dataDir/region_risk_avg"),
+        () => publishTable(last, s"$dataDir/last_sale_per_address"),
+        () => publishTable(top3, s"$dataDir/top3_recent_sales_by_receiving"),
+        // S4 — single-file headered CSV exports with the reference's exact
+        // file names, order baked in (pipeline.py:214-215)
+        () => Io.writeSingleCsv(region, s"$curatedDir/region_risk_avg.csv"),
+        () => Io.writeSingleCsv(top3, s"$curatedDir/top3_recent_sales_by_receiving.csv"))
+      val failures = sinks.map(pool.submit(_)).flatMap(failure)
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
       Result(stg, region, last, top3, dqPre, dqPost)
     } finally shared.foreach(_.unpersist())
   }
+
+  /** The parquet writes go through a named method, so their jobs' call
+    * sites name publish also when a pool thread submits them.
+    */
+  private def publishTable(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").parquet(path)
+
+  /** Waits for `f`; the exception its task threw, if it threw. */
+  private def failure(f: Future[_]): Option[Throwable] =
+    try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
 
   private def writeString(path: String, s: String): Unit =
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), s)

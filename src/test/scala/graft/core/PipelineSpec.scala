@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.ActiveJobs
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan,
   TakeOrderedAndProjectExec}
@@ -25,18 +26,23 @@ class PipelineSpec extends SparkSpec {
 
   private def cachedEntries(): Int = CacheEntries.count(spark)
 
+  private def activeJobs(): Seq[Int] = ActiveJobs.ids(spark.sparkContext)
+
   private object Aqe extends AdaptiveSparkPlanHelper
 
-  /** Physical plans of the SQL actions `body` runs, in execution order. */
-  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+  /** The SQL actions `body` runs, in execution order, each with the
+    * exception it failed with, if it failed.
+    */
+  private def executions(body: => Unit): Seq[(QueryExecution, Option[Exception])] = {
     val marker = "pipeline_spec_marker"
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(QueryExecution, Option[Exception])]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = plans.add(qe.executedPlan)
+          durationNs: Long): Unit = seen.add((qe, None))
       override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
+          exception: Exception): Unit = seen.add((qe, Some(exception)))
     }
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == marker)
     spark.listenerManager.register(listener)
     try {
       body
@@ -44,13 +50,17 @@ class PipelineSpec extends SparkSpec {
       // action's event has arrived, so has every event before it
       spark.range(1).toDF(marker).collect()
       val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
-      def arrived = plans.stream().anyMatch(_.output.exists(_.name == marker))
+      def arrived = seen.stream().anyMatch(e => isMarker(e._1))
       while (!arrived && System.nanoTime() < deadline) Thread.sleep(50)
       assert(arrived, "listener events did not arrive")
     } finally spark.listenerManager.unregister(listener)
-    plans.toArray(Array.empty[SparkPlan]).toSeq
-      .filterNot(_.output.exists(_.name == marker))
+    seen.toArray(Array.empty[(QueryExecution, Option[Exception])]).toSeq
+      .filterNot(e => isMarker(e._1))
   }
+
+  /** Physical plans of the SQL actions `body` runs, in execution order. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] =
+    executions(body).collect { case (qe, None) => qe.executedPlan }
 
   /** Each action's plan plus the cached plans it is the first to read. The
     * first reader of a cache computes it; every action in the flow reads
@@ -148,6 +158,8 @@ class PipelineSpec extends SparkSpec {
     val e = intercept[Quality.QualityGateException] {
       Pipeline.run(spark, in.toString, data, curated)
     }
+    // clean's epoch-unit probes ran beside the pre profile: none outlives run
+    assert(activeJobs().isEmpty)
     assert(e.getMessage.contains("pre_clean"))
     // inspection artifacts were published BEFORE the throw (pipeline.py:236-247)
     assert(new java.io.File(s"$data/raw_snapshot").isDirectory)
@@ -167,6 +179,39 @@ class PipelineSpec extends SparkSpec {
     assert(cachedEntries() == cached)
     assert(new java.io.File(s"$data/stg_transactions").isDirectory)
     assert(new java.io.File(s"$curated/region_risk_avg.csv").isFile)
+  }
+
+  test("sink failure: every sink runs, the first failure wins, nothing outlives run") {
+    // curatedDir is a regular file, so both CSV exports fail when they write
+    val in = writePassCsv(Files.createTempDirectory("pipe_sinkfail"))
+    val data = tmp("pipe_data_sf")
+    val curated = Files.createTempFile("pipe_curated_sf", ".file").toString
+    val cached = cachedEntries()
+    var thrown: Throwable = null
+    val failed = executions {
+      thrown = intercept[Exception](Pipeline.run(spark, in, data, curated))
+      assert(activeJobs().isEmpty)
+    }.collect { case (qe, Some(e)) => (qe.logical.toString, e) }
+
+    // both exports failed with the same message, so each failure is told
+    // apart by the write it came from
+    def failureOf(export: String): Throwable = {
+      val hits = failed.collect { case (plan, e) if plan.contains(export) => e }
+      assert(hits.size == 1, s"$export failed in ${hits.size} writes")
+      hits.head
+    }
+    assert(failed.size == 2, s"${failed.size} writes failed")
+    // declared order: the region export's failure, the top-3 one's attached
+    assert(thrown eq failureOf("region_risk_avg.csv"), thrown)
+    // (Spark attaches its own caller-stack record as a suppressed too)
+    val top3Failure = failureOf("top3_recent_sales_by_receiving.csv")
+    assert(thrown.getSuppressed.exists(_ eq top3Failure), thrown.getSuppressed.toSeq)
+
+    Seq("stg_transactions", "region_risk_avg", "last_sale_per_address",
+      "top3_recent_sales_by_receiving").foreach { t =>
+      assert(new java.io.File(s"$data/$t/_SUCCESS").isFile, t)
+    }
+    assert(cachedEntries() == cached)
   }
 
   test("dirty header names: pre-DQ runs on RAW names (trivially passes), clean normalizes") {
