@@ -29,8 +29,9 @@ object Bench {
     // CONSUME = noop-format write, NOT count() (round-13, the x13/x348
     // finding): a bare count() lets Catalyst ELIMINATE any
     // cardinality-preserving subtree — a left join against a unique-key
-    // aggregate drops wholesale with its entire upstream, and the audit
-    // (graft.PruneAudit) showed 84 of 369 queries lost operators under
+    // aggregate drops wholesale with its entire upstream, and a one-off
+    // operator-census audit (full vs count() optimized plan; BenchConsumeSpec
+    // keeps the census) showed 84 of 369 queries lost operators under
     // count(), a dozen catastrophically (x13's counted plan was literally
     // count(1) over the raw parquet: the whole minhash/LSH pipeline
     // unmeasured since round 2). The noop sink consumes every output row
@@ -147,7 +148,7 @@ object Bench {
     println(fullJson)
     // The driver keeps only the LAST 2000 chars of stdout; with 120+ queries
     // the single JSON line is >4000 chars and the head-positioned totals were
-    // truncated away in BENCH_r07/r08 (judge had to re-measure). Two fixes:
+    // truncated away in rounds 7 and 8 (walls had to be re-measured). Two fixes:
     // a short trailing summary line that always fits the tail capture, and
     // the full JSON persisted to a file committed per round.
     val memoTotal = math.round(memoBuilds.map(_._2).sum * 1000) / 1000.0

@@ -14,7 +14,7 @@ package graft.core
   * Seconds accumulate PER PROCESS across all invocations (a 2-entry LRU
   * can rebuild the same memo for warmup-SF and measured-SF entries — both
   * builds count; that is exactly the attribution the bench needs).
-  * Queries also run under Verify/Probe/tests, where nothing reads the
+  * Queries also run under Verify/tests, where nothing reads the
   * meter — a few atomic adds per memo build is noise there.
   */
 object MemoMeter {

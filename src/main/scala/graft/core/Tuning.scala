@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-dependent AQE partition-sizing knobs for every harness main
-  * (Bench / Verify / Probe / PlanDump), parameterised by env so the
+/** Scale-dependent AQE partition-sizing knobs for every main
+  * (Bench / Verify / PipelineMain), parameterised by env so the
   * production values need no rebuild (optimization guide §2.2 "fewer,
   * larger reduce partitions").
   *

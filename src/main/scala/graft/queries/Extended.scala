@@ -4,6 +4,7 @@ import graft.core._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Group X — scale/LLM-pipeline extensions over the TPC-H-ish fixtures
   * (SURVEY §2.10). These are the operators the reference lacks entirely
@@ -4252,7 +4253,7 @@ object ExtendedQueries {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, DataFrame]): Boolean = {
         val evict = size() > 2
-        if (evict) try e.getValue.unpersist() catch { case _: Throwable => () }
+        if (evict) try e.getValue.unpersist() catch { case NonFatal(_) => () }
         evict
       }
     }
@@ -4272,7 +4273,7 @@ object ExtendedQueries {
       else graft.core.MemoMeter.time("x225_boot") {
         if (cur != null) {
           x225BootMemo.remove(bootKey)
-          try cur.unpersist() catch { case _: Throwable => () }
+          try cur.unpersist() catch { case NonFatal(_) => () }
         }
         val built = ev.filter(col("eventId") % 4 =!= 0)
           .groupBy("userId")
@@ -4282,7 +4283,7 @@ object ExtendedQueries {
         built.count() // force under the builder; reps ride the cache
         val prev = x225BootMemo.put(bootKey, built)
         if (prev != null && (prev ne built))
-          try prev.unpersist() catch { case _: Throwable => () }
+          try prev.unpersist() catch { case NonFatal(_) => () }
         built
       }
     }

@@ -4,6 +4,7 @@ import graft.core._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Group L — LLM-training-data pipeline operators over the documents /
   * embeddings fixtures: near-duplicate detection (MinHash-LSH, SimHash,
@@ -67,7 +68,7 @@ object LlmQueries {
     // cache vs session lifetime): unpersisting through a dead session must
     // not fail the UNRELATED query that triggered the eviction — stale
     // entries are simply dropped
-    pinned.foreach(d => try d.unpersist() catch { case _: Throwable => () })
+    pinned.foreach(d => try d.unpersist() catch { case NonFatal(_) => () })
     pinned.clear()
     // x47 hands over an already-persisted frame (its loop pins each round);
     // persisting it again would log a CacheManager warning and do nothing
@@ -1512,7 +1513,7 @@ object LlmQueries {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, (DataFrame, Int)]): Boolean = {
         val evict = size() > 2
-        if (evict) try e.getValue._1.unpersist() catch { case _: Throwable => () }
+        if (evict) try e.getValue._1.unpersist() catch { case NonFatal(_) => () }
         evict
       }
     }
@@ -1535,7 +1536,7 @@ object LlmQueries {
       // repin rule)
       if (cur != null) {
         componentMemo.remove(key)
-        try cur._1.unpersist() catch { case _: Throwable => () }
+        try cur._1.unpersist() catch { case NonFatal(_) => () }
       }
     }
     graft.core.MemoMeter.time("x47_components") {
@@ -1558,7 +1559,7 @@ object LlmQueries {
       // returns the displaced entry, whose pin we release (review r10)
       val prev = componentMemo.put(key, (labelsPinned, rounds))
       if (prev != null && (prev._1 ne labelsPinned))
-        try prev._1.unpersist() catch { case _: Throwable => () }
+        try prev._1.unpersist() catch { case NonFatal(_) => () }
     }
     labelsPinned
     }
@@ -4262,17 +4263,16 @@ object LlmQueries {
   def x129PrefixJoin(spark: SparkSession, sfDir: String): DataFrame =
     x129Parts(spark, sfDir).out
 
-  /** x129's stage frames, exposed for the declared probe harness
-    * (graft.Probe / ProbeSpec): the volume invariants — candidates are
-    * exactly the unique-set prefix matches, output honors the threshold —
-    * are asserted against these, not re-derived copies that could drift.
+  /** x129's stage frames, exposed for ProbeSpec: the volume invariants —
+    * candidates are exactly the unique-set prefix matches, output honors
+    * the threshold — are asserted against these, not re-derived copies
+    * that could drift.
     * `collapse` selects the exact-set-collapse regime: None (production
     * default) decides ADAPTIVELY from a dup-rate pre-check (see the gate
     * comment in the body — verdict r10 #6: on the organic corpus the
     * collapse's two array-keyed shuffles cost ~57% of the wall and buy
-    * nothing); Some(true)/Some(false) force a regime — used only by the
-    * probe to measure the gate's two sides and by ProbeSpec to pin that
-    * both regimes produce IDENTICAL output. */
+    * nothing); Some(true)/Some(false) force a regime — used only by
+    * ProbeSpec to pin that both regimes produce IDENTICAL output. */
   private[graft] final case class X129Parts(
       setsU: DataFrame, cand: DataFrame, out: DataFrame)
 
@@ -4881,7 +4881,7 @@ object LlmQueries {
     * AQE's runtime exchange reuse already collapses the six textual
     * copies into one execution of each identical exchange subtree, so the
     * pin's persist + count() barrier only serialized what the reused
-    * exchanges overlapped. Lesson recorded in OPTIMIZATION_r15.md: static
+    * exchanges overlapped. Lesson: static
     * explain scan counts are NOT execution counts under AQE reuse.
     */
   def x140RetrievalEval(spark: SparkSession, sfDir: String): DataFrame = {
@@ -6353,7 +6353,7 @@ object LlmQueries {
         } finally {
           d.end()
           if (failed) {
-            if (os != null) { try os.close() catch { case _: Throwable => () } }
+            if (os != null) { try os.close() catch { case NonFatal(_) => () } }
             if (stage != null) stage.delete(): Unit
           }
         }

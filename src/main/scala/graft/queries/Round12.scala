@@ -3,6 +3,7 @@ package graft.queries
 import graft.core._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Round-12 additions (registered in SparkEntry, oracled in Oracles):
   * lexical-richness economics (x306/x307/x318/x320), filter-rule
@@ -1233,7 +1234,7 @@ object Round12Queries {
           !spark.sparkContext.isStopped) return cur
       if (cur != null) {
         candJacMemo.remove(key)
-        try cur.unpersist() catch { case _: Throwable => () }
+        try cur.unpersist() catch { case NonFatal(_) => () }
       }
     }
     graft.core.MemoMeter.time("candJaccard") {
@@ -1286,7 +1287,7 @@ object Round12Queries {
       // identical); the displaced entry's pin must not leak
       val prev = candJacMemo.put(key, built)
       if (prev != null && (prev ne built))
-        try prev.unpersist() catch { case _: Throwable => () }
+        try prev.unpersist() catch { case NonFatal(_) => () }
     }
     built
     }
@@ -1301,7 +1302,7 @@ object Round12Queries {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, DataFrame]): Boolean = {
         val evict = size() > 2
-        if (evict) try e.getValue.unpersist() catch { case _: Throwable => () }
+        if (evict) try e.getValue.unpersist() catch { case NonFatal(_) => () }
         evict
       }
     }

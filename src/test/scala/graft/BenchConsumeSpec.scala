@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -17,12 +18,22 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 class BenchConsumeSpec extends SparkSpec {
 
-  // x348 was a PruneAudit find in round 13 but its same-round restructure
-  // (one union+aggregate finale) made it consumer-proof — no longer a
-  // sentinel; x211's backbone join structure remains count()-prunable.
+  // x348 was a round-13 count()-prune audit find, but its same-round
+  // restructure (one union+aggregate finale) made it consumer-proof — no
+  // longer a sentinel; x211's backbone join structure remains
+  // count()-prunable.
   private val sentinels =
     Seq("x13_minhash_neardup", "x114_stream_batch_parity",
       "x211_graph_backbone")
+
+  /** Operator census of an optimized plan (joins / windows / generates /
+    * aggregates): a consumer whose optimized plan scores BELOW the full
+    * plan's census has let Catalyst eliminate declared work.
+    */
+  private def census(p: LogicalPlan): Int =
+    p.collect { case n if n.nodeName.contains("Join") ||
+      n.nodeName.contains("Window") || n.nodeName.contains("Generate") ||
+      n.nodeName.contains("Aggregate") => 1 }.sum
 
   test("Bench.consume executes the full declared plan on the prunable sentinels") {
     val sf = "/root/testdata/sf0.001"
@@ -31,7 +42,7 @@ class BenchConsumeSpec extends SparkSpec {
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit =
-        captured.add(PruneAudit.census(qe.optimizedPlan))
+        captured.add(census(qe.optimizedPlan))
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
@@ -39,13 +50,13 @@ class BenchConsumeSpec extends SparkSpec {
     try {
       for (name <- sentinels) {
         val df = SparkEntry.queries(name)(spark, sf)
-        val full = PruneAudit.census(df.queryExecution.optimizedPlan)
+        val full = census(df.queryExecution.optimizedPlan)
         // the sentinel property: a count() consumer WOULD prune this plan.
         // If a refactor makes the sentinel unprunable (e.g. it becomes a
         // pinned query), it no longer guards anything — swap in another
-        // query from the PruneAudit-flagged set.
+        // query whose counted census is below its full census.
         val counted =
-          PruneAudit.census(df.groupBy().count().queryExecution.optimizedPlan)
+          census(df.groupBy().count().queryExecution.optimizedPlan)
         assert(counted < full,
           s"$name is no longer count()-prunable (full=$full counted=$counted)" +
             " — it cannot act as a consume-path sentinel; replace it")

@@ -2,20 +2,18 @@ package graft
 
 import graft.queries.LlmQueries
 
-/** Pins the probe harness's volume INVARIANTS (verdict r10 #1) against an
-  * independent driver-side brute force on the sf0.001 fixture — the probe
-  * numbers in probe_last.json are only a per-round signal if the volumes
-  * they report are the volumes the algorithm is CONTRACTED to produce:
+/** Pins query volume INVARIANTS (verdict r10 #1) against an independent
+  * driver-side brute force on the sf0.001 fixture: each query must emit
+  * the volume its algorithm is CONTRACTED to produce.
   *
   *   - x129's candidate pairs are exactly the unique-set prefix matches
   *     (no candidate invented, none lost) and its output is exactly the
   *     Jaccard ≥ 0.8 pairs — recomputed here pair-by-pair in plain Scala;
   *   - the collapse and no-collapse regimes are output-identical (the
-  *     no-collapse probe baseline measures COST, never a different answer);
+  *     adaptive gate picks a cost, never a different answer);
   *   - x13-LSH candidate volume derives from band-bucket sizes (Σ c(c−1)/2,
   *     an aggregate over bucket counts) and sits far under all-pairs;
-  *   - probe_last.json's renderer emits parseable JSON with the fields the
-  *     next round's reader greps for.
+  *   - x47, x269/x276 and x283 keep their structural shape contracts.
   */
 class ProbeSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
@@ -89,7 +87,7 @@ class ProbeSpec extends SparkSpec {
       .groupBy("band", "bh").agg(count(lit(1)).as("c"))
       .collect().map(_.getAs[Long]("c"))
     val candFromSizes = sizes.map(c => c * (c - 1) / 2).sum
-    // the probe's aggregate must equal the per-bucket recomputation
+    // the aggregate must equal the per-bucket recomputation
     val aggCand = LlmQueries.bandBuckets(docs)
       .groupBy("band", "bh").agg(count(lit(1)).as("c"))
       .agg(sum(expr("c * (c - 1) div 2"))).head().getLong(0)
@@ -99,10 +97,9 @@ class ProbeSpec extends SparkSpec {
       s"banded candidates ($candFromSizes) must sit far under all-pairs ($allPairs)")
   }
 
-  // ---- structural probe invariants beyond x129/x13 (verdict r11 #3):
-  // a probe regression must FAIL A SPEC, not wait for a human to diff
-  // probe_last.json. These are the cheap shape contracts; walls stay the
-  // probe's business.
+  // ---- structural invariants beyond x129/x13 (verdict r11 #3): a
+  // volume regression must FAIL A SPEC. These are the cheap shape
+  // contracts; walls are the bench's business.
 
   test("x47: fixpoint converges in a bounded round count") {
     import graft.queries.LlmQueries
@@ -111,7 +108,7 @@ class ProbeSpec extends SparkSpec {
     // label propagation halves the longest unresolved path per round;
     // dup components are md5-fingerprint stars (diameter ≤ 2 hops), so
     // double-digit rounds would mean the edge frame or the propagation
-    // rule regressed — the probe's 100× row has never needed more than 2
+    // rule regressed — it has never needed more than 2
     assert(rounds >= 1 && rounds <= 10,
       s"x47 fixpoint took $rounds rounds — propagation shape regressed")
   }
@@ -137,23 +134,5 @@ class ProbeSpec extends SparkSpec {
     val got = Round11Queries.x283SystematicSample(spark, sf).count()
     assert(got == (n + 24) / 25,
       s"x283 emitted $got rows for n=$n, expected ${(n + 24) / 25}")
-  }
-
-  test("probe_last.json renderer emits parseable JSON with the contract fields") {
-    import spark.implicits._
-    val json = Probe.renderJson("/root/testdata/sf0.1", Seq(
-      Probe.Rec("x129", "/tmp/d", 27300000L, 14.3456,
-        Seq("unique_sets" -> 5000L, "cand_pairs" -> 120L)),
-      Probe.Rec("x255_hash_ks", "/root/testdata/sf0.1", 1L, 0.5, Nil)))
-    val df = spark.read.json(Seq(json).toDS)
-    assert(df.columns.toSet == Set("sf", "probes"))
-    val probes = df.select(org.apache.spark.sql.functions.explode(
-      org.apache.spark.sql.functions.col("probes")).as("p")).select("p.*")
-    assert(probes.columns.toSet ==
-      Set("probe", "dir", "rows", "wall_s", "unique_sets", "cand_pairs"))
-    val r = probes.where("probe = 'x129'").head()
-    assert(r.getAs[Long]("rows") == 27300000L)
-    assert(r.getAs[Double]("wall_s") == 14.346)
-    assert(r.getAs[Long]("cand_pairs") == 120L)
   }
 }
