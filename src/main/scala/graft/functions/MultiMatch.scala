@@ -36,8 +36,6 @@ final class AhoCorasick private (
     patLen: Array[Int],
     patUtf: Array[UTF8String]) extends Serializable {
 
-  def numPatterns: Int = patLen.length
-
   /** Scan `s`, returning (n_matched, first_pos, first_term):
     *  - n_matched  — how many DISTINCT patterns occur at least once
     *  - first_pos  — the smallest 1-based start offset of any match

@@ -1487,82 +1487,45 @@ object LlmQueries {
     (labelsPinned, rounds)
   }
 
-  /** Memo-hit counter for the component engine — spec/probe observability
-    * (X47MemoSpec asserts both the reuse and the invalidation edges). */
-  private[graft] val x47MemoHits = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Process-scoped memo of the converged min-label frame, keyed by
-    * (sfDir, documents-fixture stamp): x47, x104 and x238 each need the
-    * SAME fixpoint (shared code so the consumers cannot drift from the
-    * engine they audit), and before this memo each declared query re-ran
-    * the full band-bucket fixpoint — three-plus rides on one computation
-    * per bench pass (r9 verdict ask #3). The entry owns its persisted
-    * frame OUTSIDE the repin registry (the rotation must not evict a
-    * memoized fixpoint mid-bench); the leak is bounded at ONE converged
+  /** The converged min-label frame and its round count, a
+    * [[FixtureMemo]] on the documents fixture: x47, x104 and
+    * x238 each need the SAME fixpoint (shared code so the consumers cannot
+    * drift from the engine they audit), and before this memo each declared
+    * query re-ran the full band-bucket fixpoint — three-plus rides on one
+    * computation per bench pass (r9 verdict ask #3). The entry owns its
+    * persisted frame OUTSIDE the repin registry (the rotation must not
+    * evict a memoized fixpoint mid-bench); each entry is one converged
     * label frame — edge-endpoint-sized (the dup fraction), never
-    * corpus-sized — replaced wholesale when the key or session changes.
+    * corpus-sized.
     */
-  /** Two-entry LRU, not a single slot: Bench warms every query at sf0.001
-    * immediately before timing it at the measured SF, so a single-slot
-    * memo would be evicted by each consumer's own warmup and every
-    * consumer would still pay one full measured-SF fixpoint. Two entries
-    * let the warm and measured corpora coexist; eviction unpersists.
-    */
-  private val componentMemo =
-    new java.util.LinkedHashMap[String, (DataFrame, Int)](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (DataFrame, Int)]): Boolean = {
-        val evict = size() > 2
-        if (evict) try e.getValue._1.unpersist() catch { case NonFatal(_) => () }
-        evict
-      }
-    }
+  private val components = new FixtureMemo[(DataFrame, Int)](
+    "x47_components", "documents", _._1.unpersist())
+
+  /** Memo-hit counter for the component engine — spec/bench observability
+    * (X47MemoSpec asserts both the reuse and the invalidation edges). */
+  private[graft] def x47MemoHits = components.hits
 
   /** The converged component labels for `sfDir` — memoized (see
-    * [[componentMemo]]). Returns a PERSISTED, already-forced frame owned
+    * [[components]]). Returns a PERSISTED, already-forced frame owned
     * by the memo; callers must NOT repin or unpersist it. */
   private def convergedLabels(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"$sfDir|${Io.fixtureStamp(spark, sfDir, "documents")}"
-    componentMemo.synchronized {
-      val cur = componentMemo.get(key)
-      if (cur != null && (cur._1.sparkSession eq spark) &&
-          !spark.sparkContext.isStopped) {
-        x47MemoHits.incrementAndGet()
-        x47LastRounds.set(cur._2)
-        return cur._1
-      }
-      // a hit against a stopped/replaced session is dead weight — drop it
-      // (eviction through a dead session must not fail the query, the
-      // repin rule)
-      if (cur != null) {
-        componentMemo.remove(key)
-        try cur._1.unpersist() catch { case NonFatal(_) => () }
-      }
+    val (labelsPinned, rounds) = components(spark, sfDir) {
+      val docs = Io.table(spark, sfDir, "documents")
+      val edges = dupStarEdges(docs)
+      // iterate over the edge-connected subgraph ONLY: singletons (the
+      // vast majority of a real corpus) can never change label, so keeping
+      // them in the loop frame would make every round's join+agg scan
+      // corpus-sized; they rejoin as their own component after the
+      // fixpoint. Both edge directions are present, so `a` alone covers
+      // every endpoint.
+      val built = propagateLabels(edges,
+        edges.select(col("a").as("doc_id")).distinct()
+          .withColumn("label", col("doc_id")))
+      edges.unpersist()
+      built
     }
-    graft.core.MemoMeter.time("x47_components") {
-    val docs = Io.table(spark, sfDir, "documents")
-    val edges = dupStarEdges(docs)
-    // iterate over the edge-connected subgraph ONLY: singletons (the
-    // vast majority of a real corpus) can never change label, so keeping
-    // them in the loop frame would make every round's join+agg scan
-    // corpus-sized; they rejoin as their own component after the
-    // fixpoint. Both edge directions are present, so `a` alone covers
-    // every endpoint.
-    val (labelsPinned, rounds) = propagateLabels(edges,
-      edges.select(col("a").as("doc_id")).distinct()
-        .withColumn("label", col("doc_id")))
     x47LastRounds.set(rounds)
-    edges.unpersist()
-    componentMemo.synchronized {
-      // two concurrent misses both compute (acceptable: work is wasted,
-      // results identical); the LOSER's frame must not leak — put()
-      // returns the displaced entry, whose pin we release (review r10)
-      val prev = componentMemo.put(key, (labelsPinned, rounds))
-      if (prev != null && (prev._1 ne labelsPinned))
-        try prev._1.unpersist() catch { case NonFatal(_) => () }
-    }
     labelsPinned
-    }
   }
 
   def x47DedupComponents(spark: SparkSession, sfDir: String): DataFrame =
@@ -1575,7 +1538,7 @@ object LlmQueries {
     * frame. `register=true` (x169: a one-shot fixpoint the memo does not
     * own) puts the PERSISTED labels handle under the repin registry so the
     * next pinning query frees it; `register=false` (the memoized x47
-    * engine) leaves ownership with [[componentMemo]] — registering a
+    * engine) leaves ownership with [[components]] — registering a
     * memoized frame would let an unrelated query evict it mid-bench.
     * Either way the truncated view below reads the same cached blocks.
     */
@@ -2196,8 +2159,6 @@ object LlmQueries {
     scores.orderBy(desc("score"), col("tok")).limit(20)
   }
 
-  private val x169LastDir = new java.util.concurrent.atomic.AtomicReference[String]()
-
   /** x169 — fixpoint RESTART (round-9; x163's restartability claim for the
     * ITERATIVE engine): x47's min-label propagation interrupted after ONE
     * round, the intermediate labels written to parquet, read back COLD
@@ -2219,7 +2180,7 @@ object LlmQueries {
     val identity0 = edges.select(col("a").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
     val (seg1, _) = propagateLabels(edges, identity0, maxRounds = 1)
-    val ckpt = Io.freshTmpDir(spark, x169LastDir, "x169_ckpt")
+    val ckpt = Io.freshTmpDir(spark, "x169_ckpt")
     seg1.write.mode("overwrite").parquet(ckpt)
     seg1.unpersist()
     val (labelsPinned, _) = propagateLabels(edges, spark.read.parquet(ckpt))
@@ -2477,13 +2438,11 @@ object LlmQueries {
     * rows per unique doc); the restart costs one write + one scan of
     * state-sized data, never a corpus re-shingle.
     */
-  private val x163LastDir = new java.util.concurrent.atomic.AtomicReference[String]()
-
   def x163DedupStateRestart(spark: SparkSession, sfDir: String): DataFrame = {
     val docs  = Io.table(spark, sfDir, "documents")
     val standing = docs.filter(col("doc_id") % 4 =!= 0)
     val delta    = docs.filter(col("doc_id") % 4 === 0)
-    val stateDir = Io.freshTmpDir(spark, x163LastDir, "x163_state")
+    val stateDir = Io.freshTmpDir(spark, "x163_state")
     standingBucketState(standing).write.mode("overwrite").parquet(stateDir)
     incrementalAssign(spark.read.parquet(stateDir), delta)
   }
@@ -5118,23 +5077,15 @@ object LlmQueries {
       df.sparkSession.createDataFrame(df.rdd, df.schema)
     // pin the pre-aggregated cells once per batch (x120's persist+truncate
     // discipline): ONE scan of batch b feeds the merge, the watermark
-    // statistic, and both splits. The three batch aggregates are mutually
-    // INDEPENDENT (only the merge below threads state), so their forcing
-    // counts run concurrently from a driver thread pool (guide §2.6:
-    // overlap independent jobs — the next batch's tasks back-fill the
-    // tail of the previous batch's stage instead of three serial
-    // tail-latency payments). Results are unaffected: each count() just
-    // materializes a cache; the state fold below stays sequential.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // statistic, and both splits. The three forcing counts run one after
+    // another: run concurrently from a driver pool, they won only 7 of 10
+    // cold sf0.1 pairs, by less than the runs' own spread.
     val cellsSeq: Seq[DataFrame] = Seq(
       ev.filter(col("ts_us") < t1),
       ev.filter(col("ts_us") >= t1 && col("ts_us") < t2),
       ev.filter(col("ts_us") >= t2))
       .map(b => StreamingWindows.cellsWithMax(b, W).persist())
-    Await.result(
-      Future.sequence(cellsSeq.map(c => Future(c.count()))),
-      scala.concurrent.duration.Duration.Inf)
+    cellsSeq.foreach(_.count())
     var state = StreamingWindows.emptyState(spark)
     var wm = Long.MinValue
     val outs = cellsSeq.map { cells =>

@@ -3,7 +3,6 @@ package graft.queries
 import graft.core._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.util.control.NonFatal
 
 /** Round-12 additions (registered in SparkEntry, oracled in Oracles):
   * lexical-richness economics (x306/x307/x318/x320), filter-rule
@@ -1215,10 +1214,9 @@ object Round12Queries {
     *     explode→16-min pipeline by MinhashAllSpec) computed in the SAME
     *     scan that builds the shingle-set arrays — the 50× shingle
     *     explosion and its signature shuffle are gone;
-    *   - the result is MEMOIZED per (sfDir, documents fixture stamp) —
-    *     componentMemo's discipline, 2-entry LRU so the bench's sf0.001
-    *     warmups cannot evict the measured-SF entry — because three
-    *     declared queries each re-ran this whole build per invocation.
+    *   - the result is a [[FixtureMemo]] on the documents
+    *     fixture, because three declared queries each re-ran this whole
+    *     build per invocation.
     *     The pinned frame is PROJECTED to the columns the consumers read
     *     (ids, set sizes, intersection, both signatures): the shingle-set
     *     arrays themselves never enter the pin, so the entry is
@@ -1226,18 +1224,8 @@ object Round12Queries {
     *
     * Callers must NOT repin or unpersist the returned frame.
     */
-  private def candJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"$sfDir|${Io.fixtureStamp(spark, sfDir, "documents")}"
-    candJacMemo.synchronized {
-      val cur = candJacMemo.get(key)
-      if (cur != null && (cur.sparkSession eq spark) &&
-          !spark.sparkContext.isStopped) return cur
-      if (cur != null) {
-        candJacMemo.remove(key)
-        try cur.unpersist() catch { case NonFatal(_) => () }
-      }
-    }
-    graft.core.MemoMeter.time("candJaccard") {
+  private def candJaccard(spark: SparkSession, sfDir: String): DataFrame =
+    candJac(spark, sfDir) {
     graft.plans.GraftExtensions.register(spark)
     val fanned = fanOut(Io.table(spark, sfDir, "documents"))
     // Build-scoped staging pins: the native signature has NO exchange, so
@@ -1282,30 +1270,11 @@ object Round12Queries {
     built.count() // force under the builder; consumers ride the cache
     sigN.unpersist(false)
     sub.unpersist(false)
-    candJacMemo.synchronized {
-      // two concurrent misses both compute (work wasted, results
-      // identical); the displaced entry's pin must not leak
-      val prev = candJacMemo.put(key, built)
-      if (prev != null && (prev ne built))
-        try prev.unpersist() catch { case NonFatal(_) => () }
-    }
     built
     }
-  }
 
-  /** See [[candJaccard]]: 2-entry LRU keyed by (sfDir, fixture stamp);
-    * eviction unpersists. Two entries, not one — Bench warms each
-    * consumer at sf0.001 immediately before timing it at the measured SF,
-    * so a single slot would thrash per consumer. */
-  private val candJacMemo =
-    new java.util.LinkedHashMap[String, DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean = {
-        val evict = size() > 2
-        if (evict) try e.getValue.unpersist() catch { case NonFatal(_) => () }
-        evict
-      }
-    }
+  private val candJac =
+    new FixtureMemo[DataFrame]("candJaccard", "documents", _.unpersist())
 
   /** x333 — MINHASH k SWEEP (round-12): on the same candidates, the
     * estimator error of k = 4 / 8 / 16 signature prefixes — mean

@@ -1,0 +1,55 @@
+package graft
+
+import java.io.File
+
+import scala.io.Source
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Rules on the program's own sources, read as text: each pins a
+  * duplicate mechanism or a broad catch that was removed, so a copy
+  * cannot come back unnoticed.
+  */
+class SourceRulesSpec extends AnyFunSuite {
+
+  private val sources: Seq[(String, Seq[String])] = {
+    val root = new File("src/main")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk) else Seq(f)
+    walk(root).filter(_.getName.endsWith(".scala")).map { f =>
+      val src = Source.fromFile(f, "UTF-8")
+      try f.getPath -> src.getLines().toList finally src.close()
+    }
+  }
+
+  /** `path:line` of every source line containing `needle`. */
+  private def hits(needle: String): Seq[String] =
+    for {
+      (path, lines) <- sources
+      (line, i) <- lines.zipWithIndex if line.contains(needle)
+    } yield s"$path:${i + 1}"
+
+  private def fileName(hit: String): String =
+    new File(hit.takeWhile(_ != ':')).getName
+
+  test("MemoMeter.time is called only from FixtureMemo") {
+    val calls = hits("MemoMeter.time")
+    assert(calls.nonEmpty, "FixtureMemo times its misses")
+    assert(calls.forall(fileName(_) == "FixtureMemo.scala"), calls)
+  }
+
+  test("no hand-rolled LRU: removeEldestEntry appears nowhere") {
+    assert(hits("removeEldestEntry").isEmpty, hits("removeEldestEntry"))
+  }
+
+  test("no blocking on the global ExecutionContext") {
+    assert(hits("ExecutionContext.Implicits.global").isEmpty,
+      hits("ExecutionContext.Implicits.global"))
+  }
+
+  test("catching Throwable is left only to Bench") {
+    val catches = hits("case _: Throwable")
+    assert(catches.forall(fileName(_) == "Bench.scala"), catches)
+  }
+}
