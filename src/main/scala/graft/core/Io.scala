@@ -1,25 +1,97 @@
 package graft.core
 
+import java.io.FileNotFoundException
+
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Readers for the driver's parquet fixtures (TESTDATA.md).
   *
   * All tables are plain parquet scans — Catalyst pushes filters/projections
   * down to the vectorized reader, so callers should NOT pre-materialize.
+  *
+  * Schemas come from one driver-side footer read: [[table]] lists the
+  * table's [[dataFiles]], converts the first one's footer with Spark's own
+  * converter ([[footerSchema]]) and hands the result to the reader, so a
+  * fixture read plans with zero Spark jobs (a schema-less
+  * `spark.read.parquet` runs one inference job per read). The file choice
+  * and the conversion are the ones Spark's inference makes with
+  * `mergeSchema` off, so the schema, embedded Spark metadata included, is
+  * the one a plain read would infer. Nothing is cached, so nothing can go
+  * stale when a fixture is regenerated.
   */
 object Io {
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    dataFiles(spark, path).headOption match {
+      case Some(first) => spark.read.schema(footerSchema(spark, first)).parquet(path)
+      // no data file directly under the path: Spark resolves it itself, so
+      // a missing path or an empty dir raises Spark's own AnalysisException
+      // (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA) and a partitioned dir
+      // still gets its partition columns
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The parquet data files of `path`, in the order Spark's schema
+    * inference takes them: the path itself when it is a file, else the
+    * files directly under it sorted by path, skipping names that start
+    * with `_` or `.` (`_SUCCESS`, summary and checksum files). Empty when
+    * the path does not exist.
+    */
+  def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val status =
+      try fs.getFileStatus(p) catch { case _: FileNotFoundException => return Nil }
+    if (!status.isDirectory) Seq(status)
+    else fs.listStatus(p).toSeq
+      .filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .sortBy(_.getPath.toString)
+  }
+
+  /** Spark schema of one parquet file, read from its footer on the driver
+    * and converted by Spark's own code (`ParquetFileFormat.
+    * readSchemaFromFooter`): a schema Spark embedded in the file wins, the
+    * parquet types are converted otherwise. The session's conf drives the
+    * conversion, so a TIMESTAMP(NANOS) column raises PARQUET_TYPE_ILLEGAL
+    * here unless the session reads nanos as longs. `nanosAsLong = true`
+    * forces that reading for this one conversion and leaves the session
+    * untouched.
+    */
+  def footerSchema(spark: SparkSession, file: FileStatus,
+      nanosAsLong: Boolean = false): StructType = {
+    val conf =
+      if (!nanosAsLong) spark.sessionState.conf
+      else {
+        val c = spark.sessionState.conf.clone()
+        c.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+        c
+      }
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(conf))
+  }
 
   /** Fresh unique temp dir for a roundtrip/sink query. A FIXED shared path
     * would let concurrent sessions (or a plan-building consumer racing an
     * executing one) overwrite each other's parts mid-read, so every
-    * invocation gets `<tmp>/graft_<tag>_<nanos>` and the PREVIOUS
+    * invocation gets `<tmpRoot>/<tag>_<nanos>` and the PREVIOUS
     * invocation's dir for the same `tag` is deleted here (bounded-leak
     * contract, same as LlmQueries' pin registry: execute one result before
     * building the next). Each tag belongs to one call site.
@@ -38,8 +110,22 @@ object Io {
   private val lastTmpDir =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def tmpPath(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${System.nanoTime()}"
+  private def tmpPath(tag: String): String = s"$tmpRoot/${tag}_${System.nanoTime()}"
+
+  /** The one per-JVM parent of every [[freshTmpDir]] and
+    * [[writeStreamInput]] dir, `<java.io.tmpdir>/graft_<random>`. A dir is
+    * otherwise deleted only when a later call replaces it, so the last
+    * one per tag would outlive the JVM; a shutdown hook deletes the parent
+    * and everything under it instead.
+    */
+  private lazy val tmpRoot: java.io.File = {
+    val root = java.nio.file.Files.createTempDirectory("graft_").toFile
+    sys.addShutdownHook {
+      try org.apache.commons.io.FileUtils.deleteDirectory(root)
+      catch { case NonFatal(_) => () }
+    }
+    root
+  }
 
   /** Fixture stamp of `<sfDir>/<table>.parquet`: part-file count + max
     * mtime + total bytes, the key of every [[FixtureMemo]]. A
@@ -77,7 +163,7 @@ object Io {
       valid = dir => new java.io.File(dir).isDirectory)
 
   /** The streaming-input writer every [[streamInputMemo]] build uses: it
-    * writes `df` to a new `<tmp>/graft_<tag>_<nanos>` dir and returns it.
+    * writes `df` to a new `<tmpRoot>/<tag>_<nanos>` dir and returns it.
     * The input is written ONCE per (sfDir, fixture stamp) and
     * replayed many times, so part count is capped for the READ side —
     * coalesce(4) bounds the per-micro-batch file-task count however wide
@@ -162,7 +248,8 @@ object Io {
     // a session-wide nanosAsLong would make a later raw read of a
     // ns-vintage file silently see BIGINT). Only when the footer actually
     // carries TIMESTAMP(NANOS) — which CANNOT be read at all without the
-    // legacy conf — is it set, session-wide and deliberately left on:
+    // legacy conf, so [[footerSchema]] raises PARQUET_TYPE_ILLEGAL on the
+    // driver — is it set, session-wide and deliberately left on:
     // restoring it after the lazy DataFrame returns would strand the
     // execution-time scan, and on such a fixture every events consumer
     // needs it anyway (the x109 canary reports the vintage that round).

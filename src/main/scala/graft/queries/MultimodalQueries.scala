@@ -197,19 +197,14 @@ object MultimodalQueries {
     */
   def x109SchemaAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    // Guarantee the canary's contract independent of query order: without
-    // this conf a TIMESTAMP(NANOS) vintage makes the raw read THROW
-    // ([PARQUET_TYPE_ILLEGAL]) unless some earlier events query happened to
-    // set it session-wide — with it, the ns vintage deterministically reads
-    // as BIGINT vs DuckDB's TIMESTAMP_NS and the audit goes red naming
-    // events.ts, which is the designed alarm, not an error.
-    // Scope the conf to the footer reads (restore on exit): leaving it set
-    // session-wide would make a later raw read of a ns-vintage file silently
-    // see BIGINT where it would otherwise fail loudly, so declared-query
-    // results would depend on whether the audit ran first (ADVICE r8).
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val nanosPrior = spark.conf.getOption(nanosKey)
-    spark.conf.set(nanosKey, "true")
+    // Guarantee the canary's contract independent of query order: the
+    // footers are converted with nanosAsLong forced on for these reads
+    // only, so a TIMESTAMP(NANOS) vintage deterministically reads as BIGINT
+    // vs DuckDB's TIMESTAMP_NS and the audit goes red naming events.ts —
+    // the designed alarm, not an error — while the session conf stays as
+    // it was: a session-wide nanosAsLong would make a later raw read of a
+    // ns-vintage file silently see BIGINT where it would otherwise fail
+    // loudly (ADVICE r8).
     def duckName(dt: DataType): String = dt match {
       case IntegerType       => "INTEGER"
       case LongType          => "BIGINT"
@@ -237,35 +232,20 @@ object MultimodalQueries {
     // fixture regen that changes CARDINALITY — or silently drops a part
     // file — would otherwise surface as N mysterious hash mismatches
     // instead of one named '#rows' canary row (r9 verdict ask #5).
-    def footerRows(path: String): Long = {
-      val conf = spark.sessionState.newHadoopConf()
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      val parts =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).filter(s => s.isFile &&
-              !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-            .map(_.getPath).toSeq
-        else Seq(p)
-      parts.map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
+    val conf = spark.sessionState.newHadoopConf()
+    def footerRows(f: org.apache.hadoop.fs.FileStatus): Long = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      try r.getRecordCount finally r.close()
     }
-    // Footer reads are eager at analysis time, so the conf window can close
-    // as soon as the schemas are collected into this local Seq.
-    val audited =
-      try tables.flatMap { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet").schema.fields
-          .map(f => (t, f.name, duckName(f.dataType))) :+
-          ((t, "#rows", footerRows(s"$sfDir/$t.parquet").toString))
-      }
-      finally nanosPrior match {
-        case Some(v) => spark.conf.set(nanosKey, v)
-        case None    => spark.conf.unset(nanosKey)
-      }
+    val audited = tables.flatMap { t =>
+      val path = s"$sfDir/$t.parquet"
+      val files = Io.dataFiles(spark, path)
+      require(files.nonEmpty, s"$path holds no parquet data file")
+      Io.footerSchema(spark, files.head, nanosAsLong = true).fields
+        .map(f => (t, f.name, duckName(f.dataType))) :+
+        ((t, "#rows", files.map(footerRows).sum.toString))
+    }
     audited.toDF("table_name", "column_name", "dtype")
       .orderBy("table_name", "column_name")
   }

@@ -48,6 +48,18 @@ class SourceRulesSpec extends AnyFunSuite {
       hits("ExecutionContext.Implicits.global"))
   }
 
+  test("fixture tables are read only through Io, which supplies their schema") {
+    val reads = hits("read.parquet(s\"$sfDir")
+    assert(reads.forall(fileName(_) == "Io.scala"), reads)
+  }
+
+  test("the nanosAsLong conf is set only in Io") {
+    val sets = hits("spark.sql.legacy.parquet.nanosAsLong") ++
+      hits("LEGACY_PARQUET_NANOS_AS_LONG")
+    assert(sets.nonEmpty, "Io sets it for the TIMESTAMP(NANOS) vintage")
+    assert(sets.forall(fileName(_) == "Io.scala"), sets)
+  }
+
   test("catching Throwable is left only to Bench") {
     val catches = hits("case _: Throwable")
     assert(catches.forall(fileName(_) == "Bench.scala"), catches)

@@ -14,10 +14,10 @@ import org.apache.spark.sql.types._
   *   - events:    ts is µs-precision TimestampType
   *   - eventsRaw: ts is the epoch-ns long, == DuckDB's epoch_ns(ts)
   *
-  * The ns vintage is written as a plain INT64 column (Spark cannot author
-  * TIMESTAMP(NANOS) annotations; with the nanosAsLong conf the annotated
-  * fixture surfaced as exactly this LongType shape, so the reader branch
-  * under test is the same one).
+  * Spark cannot author TIMESTAMP(NANOS) annotations, so the ns vintage is
+  * written with parquet-hadoop's example writer: a real annotated column,
+  * the one Spark refuses with PARQUET_TYPE_ILLEGAL unless the session reads
+  * nanos as longs, so `Io.eventsUnderlying`'s retry runs here.
   */
 class IoVintageSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
@@ -70,10 +70,81 @@ class IoVintageSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       === micros.map(_ * 1000L))
   }
 
+  private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** `events.parquet` with `ts` as INT64 TIMESTAMP(NANOS, isAdjustedToUTC =
+    * false), the logical type pyarrow writes for a naive ns column.
+    */
+  private def writeNanosVintage(path: String): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
+    val conf = spark.sessionState.newHadoopConf()
+    val string = LogicalTypeAnnotation.stringType()
+    val schema = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .required(INT64).as(LogicalTypeAnnotation.timestampType(false,
+        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .required(INT64).named("user_id")
+      .required(BINARY).as(string).named("event_type")
+      .required(DOUBLE).named("value")
+      .required(BINARY).as(string).named("props")
+      .named("schema")
+    val w = ExampleParquetWriter.builder(
+        HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try Seq((1L, micros(0), 10L, "click", 1.5), (2L, micros(1), 11L, "purchase", 2.5))
+      .foreach { case (id, us, user, kind, v) =>
+        w.write(groups.newGroup().append("event_id", id).append("ts", us * 1000L)
+          .append("user_id", user).append("event_type", kind).append("value", v)
+          .append("props", "{}"))
+      }
+    finally w.close()
+  }
+
+  /** A fixture dir whose events table is the ns vintage and whose other
+    * tables are the sf0.001 fixture's, so every table x109 audits exists.
+    */
+  private def nanosFixture(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vintage_nsdir")
+    tmpDirs += dir
+    for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "documents", "embeddings"))
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"/root/testdata/sf0.001/$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+    writeNanosVintage(s"$dir/events.parquet")
+    dir.toString
+  }
+
   test("ns-long vintage (legacy fixture shape) reads to the same view") {
-    val path = tmp("ns")
-    writeVintage(path, col("us") * 1000L, LongType)
-    check(path.stripSuffix("/events.parquet"))
+    val dir = nanosFixture()
+    assert(spark.conf.getOption(nanosKey).forall(_ == "false"),
+      "the retry must start from a session that refuses nanos")
+    try {
+      // the file really is the vintage Spark refuses without the legacy conf
+      val file = Io.dataFiles(spark, s"$dir/events.parquet").head
+      val e = intercept[org.apache.spark.sql.AnalysisException](Io.footerSchema(spark, file))
+      assert(e.getMessage.contains("PARQUET_TYPE_ILLEGAL"))
+      check(dir)
+    } finally spark.conf.unset(nanosKey)
+  }
+
+  test("x109 audits the ns vintage as BIGINT and leaves the session conf as it found it") {
+    val dir = nanosFixture()
+    val before = spark.conf.getOption(nanosKey)
+    try {
+      val ts = graft.queries.MultimodalQueries.x109SchemaAudit(spark, dir)
+        .where("table_name = 'events' AND column_name = 'ts'").select("dtype")
+      assert(col0[String](ts) === Seq("BIGINT"))
+      assert(spark.conf.getOption(nanosKey) === before)
+      // the audit's forced reading did not leak: a plain read still refuses
+      val file = Io.dataFiles(spark, s"$dir/events.parquet").head
+      intercept[org.apache.spark.sql.AnalysisException](Io.footerSchema(spark, file))
+    } finally spark.conf.unset(nanosKey)
   }
 
   test("µs-timestamp NTZ vintage (current fixture shape) reads to the same view") {

@@ -7,7 +7,10 @@ package org.apache.spark
   */
 object ActiveJobs {
   def ids(sc: SparkContext): Seq[Int] = {
-    sc.listenerBus.waitUntilEmpty()
+    drain(sc)
     sc.statusTracker.getActiveJobIds().toSeq
   }
+
+  /** Block until every event posted so far has reached the listeners. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
