@@ -13,10 +13,7 @@ import org.apache.spark.sql.functions._
   * order column stamped BEFORE any shuffle, then a ranking window.
   *
   * Scale note: the window shuffles once on the key columns — same cost as
-  * `dropDuplicates` itself (also one shuffle on the keys). For skewed keys
-  * use `keepFirstAgg`: a per-key `min(_ingest_id)` two-phase aggregate plus
-  * a join back, which never funnels a hot key through one sorting reducer.
-  * At fixture scale the plain window is the better plan.
+  * `dropDuplicates` itself (also one shuffle on the keys).
   */
 object Dedup {
 
@@ -63,49 +60,6 @@ object Dedup {
       df.withColumn("_kf_rn", row_number().over(w))
         .filter(col("_kf_rn") === 1)
         .drop("_kf_rn")
-    }
-  }
-
-  /** Skew-safe keep-first: per-key min(orderCol) via a two-phase hash
-    * aggregate (map-side partial combine collapses a hot key BEFORE the
-    * shuffle — the single-reducer sort a ranking window would funnel that
-    * key through never happens), then an equi-join back on (keys, orderCol).
-    * Because the join key INCLUDES the unique order column, even the join
-    * probe distributes a hot key across partitions — no single task ever
-    * holds a key's full row set.
-    *
-    * Output is identical to `keepFirst` when `orderCol` is non-null and
-    * unique per row (both hold for the `_ingest_id` stamp: the struct's
-    * `pos` component is per-row unique). Ties on (keys, orderCol) would keep
-    * all tied rows here where the window keeps one arbitrarily — that is
-    * the contract cost of skew safety, not a dedup semantics change.
-    *
-    * Cost: the input lineage is consumed twice (aggregate + probe), and a
-    * self-join never gets ReuseExchange — reading the source twice is the
-    * standard price of the pre-aggregate pattern and is cheap next to a
-    * straggler task sorting a billion-row hot key. Null keys match via <=>
-    * so null-keyed groups dedup exactly like the window path.
-    */
-  def keepFirstAgg(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val present = keys.filter(df.columns.contains)
-    if (present.isEmpty) df
-    else {
-      // collision-proof internal prefix: a fixed "_kf_" would break (or
-      // silently drop a caller column) when df itself carries _kf_-named
-      // columns, e.g. preserved intermediates of an earlier dedup stage
-      val existing = df.columns.toSet
-      val tag = Iterator.from(0).map(i => s"_kf${i}_")
-        .find(t => !existing.exists(_.startsWith(t))).get
-      val minCol = s"${tag}min"
-      val mins = df.groupBy(present.map(col): _*)
-        .agg(min(col(orderCol)).as(minCol))
-      val renamedMins = present.foldLeft(mins) { (m, k) =>
-        m.withColumnRenamed(k, s"$tag$k")
-      }
-      val cond = present.map(k => col(k) <=> col(s"$tag$k"))
-        .reduce(_ && _) && (col(orderCol) === col(minCol))
-      df.join(renamedMins, cond)
-        .drop(minCol +: present.map(k => s"$tag$k"): _*)
     }
   }
 

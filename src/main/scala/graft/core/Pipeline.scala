@@ -1,7 +1,6 @@
 package graft.core
 
-import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors,
-  Future, TimeUnit}
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -15,28 +14,19 @@ import org.apache.spark.sql.functions._
   *
   * The driver program IS the orchestration (no Prefect analog needed): plain
   * function composition, with the gates' publish-before-throw ordering
-  * preserved. All transforms are lazy DataFrames. The cleaned frame is
-  * cached before the post-clean DQ profile, which fills the cache; every
-  * published output is derived from it, so a run scans and cleans the CSV
+  * preserved. All transforms are lazy DataFrames. Before the gate the
+  * pre-clean profile is the only action over the raw frame: `clean`'s
+  * timestamp probe rides in its aggregate, so `clean` starts no job. The
+  * cleaned frame is cached before the post-clean profile, which fills the
+  * cache every published output reads, so a run scans and cleans the CSV
   * once after the pre-gate. Jobs run at CSV schema inference, the two DQ
-  * profiles, clean's epoch-unit detection, and each published output.
+  * profiles and each published output; the six sinks run at the same time
+  * from one pool.
   *
-  * Actions that do not depend on each other run at the same time, from the
-  * threads of one pool the run owns (Spark schedules jobs submitted from
-  * separate threads of one application side by side):
-  *
-  *   - `clean(raw)`, whose only eager jobs are its epoch-unit probes over
-  *     the raw frame, runs beside the pre-clean profile;
-  *   - the six sinks (four parquet tables, two CSV exports) run together.
-  *
-  * The post-clean profile stays alone: it fills the cache the sinks read.
-  * Errors keep the sequential contract. The pre-gate decides first: on a
-  * breach `run` waits for `clean`, ignores its outcome, writes the raw
-  * snapshot and throws the gate's exception; an exception of the pre
-  * profile itself wins over `clean`'s. Otherwise the first failure in
-  * declared order is thrown (`clean`'s own exception, then the sinks in the
-  * order above, later sink failures attached with `addSuppressed`). `run`
-  * returns or throws only after every job it started has finished.
+  * Errors surface in order: the pre profile's; the pre-gate (raw snapshot
+  * written, then the gate's exception); `clean`'s analysis errors; the post
+  * profile's; then the first sink failure in declared order (later ones
+  * attached with `addSuppressed`), once every sink has finished.
   */
 object Pipeline {
 
@@ -68,9 +58,10 @@ object Pipeline {
 
   /** pipeline.py:112-160 — the full clean_and_standardize task. Every access
     * is guarded on column presence; missing timestamp/amount synthesize as
-    * all-null (P4).
+    * all-null (P4). `epochUnit` is the raw timestamp column's
+    * [[Timestamps.Probe.epochUnit]], so building the frame starts no job.
     */
-  def clean(df0: DataFrame): DataFrame = {
+  def clean(df0: DataFrame, epochUnit: Option[String]): DataFrame = {
     var df = Normalize.normalizeNames(df0)
 
     if (df.columns.contains("receiving_address"))
@@ -80,7 +71,7 @@ object Pipeline {
     if (df.columns.contains("location_region"))
       df = df.withColumn("location_region", Normalize.normRegion(col("location_region")))
 
-    df = Timestamps.parseTimestampColumn(df, "timestamp")
+    df = Timestamps.parseTimestampColumn(df, "timestamp", epochUnit)
 
     df =
       if (df.columns.contains("amount"))
@@ -148,43 +139,31 @@ object Pipeline {
 
     val raw = ingestCsv(spark, inputCsv)
 
-    // Created here, so its threads inherit this thread's Spark local
-    // properties (job group, scheduler pool); drained before returning.
-    val pool = Executors.newCachedThreadPool()
-    try {
-      // clean's eager jobs read only `raw`: they run beside the pre profile
-      val cleaned = pool.submit(new Callable[DataFrame] { def call() = clean(raw) })
-
-      // DQ pre-gate runs on the RAW frame — before name normalization, so a
-      // CSV with "Timestamp " produces no timestamp rule (pipeline.py:232).
-      val dqPre = Quality.profile(raw.drop(Dedup.IngestIdCol), "pre_clean")
-      writeString(s"$dataDir/dq_metrics_pre.json", Quality.toJson(dqPre))
-      if (dqPre.conformityRate < minConformityPre) {
-        failure(cleaned) // waited for; the gate's verdict wins over clean's
-        // publish a raw snapshot for inspection, THEN fail (pipeline.py:236-247)
-        raw.drop(Dedup.IngestIdCol).write.mode("overwrite").parquet(s"$dataDir/raw_snapshot")
-        Quality.gate(dqPre, minConformityPre)
-      }
-
-      failure(cleaned).foreach(e => throw e) // clean's own exception, unwrapped
-
-      // Cached with the ingest id still on it (lastSalePerAddress breaks
-      // ties on it): the post profile fills the cache, and every output
-      // below reads it instead of re-running the scan, parse, clean and
-      // keep-first shuffle. At 100 TB this would be a written staging table.
-      val staged = cleaned.get().cache()
-      try {
-        val dqPost = Quality.profile(staged.drop(Dedup.IngestIdCol), "post_clean")
-        writeString(s"$dataDir/dq_metrics_post.json", Quality.toJson(dqPost))
-
-        val result = publish(pool, staged, dataDir, curatedDir, dqPre, dqPost)
-        Quality.gate(dqPost, minConformityPost) // post-gate publishes FIRST, then fails
-        result
-      } finally staged.unpersist() // also when publish or the gate throws
-    } finally {
-      pool.shutdown()
-      while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
+    // DQ pre-gate runs on the RAW frame — before name normalization, so a
+    // CSV with "Timestamp " produces no timestamp rule (pipeline.py:232).
+    val probe = Timestamps.rawProbe(raw, "timestamp")
+    val (dqPre, preRow) =
+      Quality.profile(raw.drop(Dedup.IngestIdCol), "pre_clean", probe.toSeq.flatMap(_.aggs))
+    writeString(s"$dataDir/dq_metrics_pre.json", Quality.toJson(dqPre))
+    if (dqPre.conformityRate < minConformityPre) {
+      // publish a raw snapshot for inspection, THEN fail (pipeline.py:236-247)
+      raw.drop(Dedup.IngestIdCol).write.mode("overwrite").parquet(s"$dataDir/raw_snapshot")
+      Quality.gate(dqPre, minConformityPre)
     }
+
+    // Cached with the ingest id still on it (lastSalePerAddress breaks
+    // ties on it): the post profile fills the cache, and every output
+    // below reads it instead of re-running the scan, parse, clean and
+    // keep-first shuffle. At 100 TB this would be a written staging table.
+    val staged = clean(raw, probe.flatMap(_.epochUnit(preRow))).cache()
+    try {
+      val dqPost = Quality.profile(staged.drop(Dedup.IngestIdCol), "post_clean")
+      writeString(s"$dataDir/dq_metrics_post.json", Quality.toJson(dqPost))
+
+      val result = publish(staged, dataDir, curatedDir, dqPre, dqPost)
+      Quality.gate(dqPost, minConformityPost) // post-gate publishes FIRST, then fails
+      result
+    } finally staged.unpersist() // also when publish or the gate throws
   }
 
   /** Writes the four tables and the two CSV exports from the cached
@@ -195,7 +174,6 @@ object Pipeline {
     * if used again.
     */
   private def publish(
-      pool: ExecutorService,
       staged: DataFrame,
       dataDir: String,
       curatedDir: String,
@@ -207,6 +185,9 @@ object Pipeline {
     val top3   = top3RecentSales(last)
     val shared = Seq(region, top3)
     shared.foreach(_.cache())
+    // Created here, so its threads inherit this thread's Spark local
+    // properties (job group, scheduler pool); drained before returning.
+    val pool = Executors.newCachedThreadPool()
     try {
       val sinks: Seq[Callable[Unit]] = Seq(
         () => publishTable(stg, s"$dataDir/stg_transactions"),
@@ -223,7 +204,11 @@ object Pipeline {
         throw first
       }
       Result(stg, region, last, top3, dqPre, dqPost)
-    } finally shared.foreach(_.unpersist())
+    } finally {
+      pool.shutdown()
+      while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
+      shared.foreach(_.unpersist())
+    }
   }
 
   /** The parquet writes go through a named method, so their jobs' call

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Data-quality profiling and gating (SURVEY §2.6, §2.9; reference
@@ -44,7 +44,12 @@ object Quality {
     * = max(0, 1 - fails/(total+1e-9)) — double-counting and the epsilon are
     * preserved exactly (pipeline.py:88-89). total=0 ⇒ rate≈1.0 ⇒ pass.
     */
-  def profile(df: DataFrame, phase: String): DqMetrics = {
+  def profile(df: DataFrame, phase: String): DqMetrics = profile(df, phase, Nil)._1
+
+  /** [[profile]] with `extra` aggregate columns riding in the same pass;
+    * also returns the aggregate's row, which holds them under their aliases.
+    */
+  def profile(df: DataFrame, phase: String, extra: Seq[Column]): (DqMetrics, Row) = {
     val present = ProfiledColumns.filter(df.columns.contains)
 
     // pandas isna() counts float NaN as missing (it IS pandas' missing
@@ -72,7 +77,7 @@ object Quality {
           .as("neg_amount"))
       else None
 
-    val aggs = count(lit(1)).as("total") +: (nullAggs ++ negAgg.toSeq)
+    val aggs = count(lit(1)).as("total") +: (nullAggs ++ negAgg.toSeq ++ extra)
     val row  = df.agg(aggs.head, aggs.tail: _*).first()
 
     val total = row.getAs[Long]("total")
@@ -86,7 +91,7 @@ object Quality {
 
     val fails = rules.values.sum
     val conformity = math.max(0.0, 1.0 - fails / (total + 1e-9))
-    DqMetrics(phase, total, nulls, rules, fails, conformity)
+    (DqMetrics(phase, total, nulls, rules, fails, conformity), row)
   }
 
   /** C2/C3 — threshold gate. Caller controls publish-before-throw ordering

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,56 +9,86 @@ import org.apache.spark.sql.types._
   *
   * The one genuinely "custom" operator in the reference: a global statistic
   * (median magnitude) picks the epoch unit, then the column converts. The
-  * Spark shape is the same: one cheap driver-side aggregation action over a
-  * single column, then a declarative per-row conversion that stays in
-  * codegen.
+  * Spark shape is the same: a handful of counters that ride in a caller's
+  * single aggregation pass ([[Probe]]), then a declarative per-row
+  * conversion that stays in codegen.
   */
 object Timestamps {
 
-  /** T1 — epoch-unit detection: median(abs(numeric values)); thresholds
-    * >1e17→ns, >1e14→us, >1e11→ms, else s; empty/all-null→s
-    * (pipeline.py:25-37). Approximate median (`percentile_approx`): exact
-    * percentile buffers every value per partition — a scale-killer at 100 TB
-    * for a statistic that only needs order-of-magnitude accuracy. The
-    * approximation returns an actual data value, so it can only differ from
-    * the exact median when values straddle a 1000× unit threshold, where the
-    * reference's single-unit model is ill-defined anyway.
+  /** T1 thresholds, largest first: median magnitude >1e17→ns, >1e14→us,
+    * >1e11→ms, else s (pipeline.py:25-37).
     */
-  def detectEpochUnit(df: DataFrame, colName: String): String =
-    detectEpochUnits(df, Seq(colName))(colName)
+  private val Thresholds = Seq(1e17 -> "ns", 1e14 -> "us", 1e11 -> "ms")
 
-  /** Multi-column T1 in ONE aggregation job: when several candidate epoch
-    * columns need unit detection (r7 probes all four units at once), a
-    * per-column `first()` would launch one full scan each — this fuses them
-    * into a single pass, which is the only acceptable shape at 100 TB.
+  /** T1 and T2 for one column, as aggregate columns that ride in the
+    * caller's `agg` (the pre-gate profile, r7's detection pass), and the
+    * decision read back from that aggregate's row.
+    *
+    * T1 — epoch-unit detection over v = abs(try_cast(c as double)): the
+    * lower median of v exceeds a threshold t exactly when
+    * 2·count(v > t) > count(v), so one counter per threshold gives the
+    * exact unit in constant state, a plain codegen'd `count` aggregate
+    * (a percentile buffer would turn the caller's aggregate into an
+    * ObjectHashAggregate). Empty/all-null → s. For an even count pandas
+    * averages the two middle values; the lower median differs from that
+    * only when the middle pair straddles a 1000× threshold, where the
+    * reference's single-unit model is ill-defined anyway.
+    *
+    * T2 — "looks numeric": numeric dtype, or every non-null value matches
+    * ^\d+(\.\d+)?$ (pipeline.py:133); counted only for other dtypes.
+    * pandas `.all()` over an empty series is vacuously true → numeric.
     */
-  def detectEpochUnits(df: DataFrame, colNames: Seq[String]): Map[String, String] = {
-    val row = df
-      .select(colNames.map(c => expr(
-        s"percentile_approx(abs(try_cast(`$c` as double)), 0.5d, 10000)").as(c)): _*)
-      .first()
-    colNames.zipWithIndex.map { case (c, i) =>
-      c -> (if (row.isNullAt(i)) "s"
-            else {
-              val m = row.getDouble(i)
-              if (m > 1e17) "ns" else if (m > 1e14) "us" else if (m > 1e11) "ms" else "s"
-            })
-    }.toMap
+  final class Probe(column: String, dataType: DataType) {
+    private val c = col("`" + column.replace("`", "``") + "`")
+    private def name(counter: String) = s"epoch_probe[$column].$counter"
+    private val numericType = dataType.isInstanceOf[NumericType]
+
+    val aggs: Seq[Column] = {
+      val v = abs(c.try_cast("double"))
+      val counts = count(v).as(name("n")) +:
+        Thresholds.map { case (t, unit) => count_if(v > t).as(name(unit)) }
+      if (numericType) counts
+      else counts :+
+        count_if(c.isNotNull && !c.cast("string").rlike("^\\d+(\\.\\d+)?$"))
+          .as(name("non_numeric"))
+    }
+
+    /** T1's unit, from a row holding [[aggs]]. */
+    def unit(row: Row): String = {
+      val n = row.getAs[Long](name("n"))
+      Thresholds.collectFirst { case (_, u) if 2 * row.getAs[Long](name(u)) > n => u }
+        .getOrElse("s")
+    }
+
+    /** What [[parseTimestampColumn]] takes: T1's unit when the column looks
+      * numeric (T2), None to parse it as datetime strings.
+      */
+    def epochUnit(row: Row): Option[String] =
+      if (numericType || row.getAs[Long](name("non_numeric")) == 0) Some(unit(row))
+      else None
   }
 
-  /** T2 — "looks numeric": numeric dtype OR every non-null value matches
-    * ^\d+(\.\d+)?$ (pipeline.py:133). pandas `.all()` over an empty series is
-    * vacuously true → the numeric path; `isEmpty` preserves that.
+  /** The probe of the raw column that becomes `name` once names are
+    * normalized ([[Normalize.normName]]). None when there is none (the
+    * column is synthesized all-null) or more than one (the ambiguous
+    * reference fails where it is converted), so a probe never fails the
+    * pass it rides in.
     */
-  def looksNumeric(df: DataFrame, colName: String): Boolean =
-    df.schema(colName).dataType match {
-      case _: NumericType => true
-      case _ =>
-        df.filter(
-            col(colName).isNotNull &&
-              !col(colName).cast("string").rlike("^\\d+(\\.\\d+)?$"))
-          .isEmpty
+  def rawProbe(raw: DataFrame, name: String): Option[Probe] =
+    raw.schema.fields.filter(f => Normalize.normName(f.name) == name) match {
+      case Array(f) => Some(new Probe(f.name, f.dataType))
+      case _        => None
     }
+
+  /** T1 over several columns in ONE aggregation job: r7 probes all four
+    * units at once, where a pass per column would scan once each.
+    */
+  def detectEpochUnits(df: DataFrame, colNames: Seq[String]): Map[String, String] = {
+    val probes = colNames.map(c => c -> new Probe(c, df.schema(c).dataType))
+    val aggs = probes.flatMap(_._2.aggs)
+    val row = df.agg(aggs.head, aggs.tail: _*).first()
+    probes.map { case (c, p) => c -> p.unit(row) }.toMap
+  }
 
   /** T3 — epoch number → TimestampType at the given unit (pipeline.py:137).
     *
@@ -101,15 +131,19 @@ object Timestamps {
   def stringToTimestamp(c: Column): Column = try_to_timestamp(c)
 
   /** The full reference rule for a raw timestamp column
-    * (pipeline.py:130-141): missing → all-null; numeric-looking → unit
-    * detection + epoch conversion; otherwise string parse with coercion.
+    * (pipeline.py:130-141): missing → all-null; numeric-looking → epoch
+    * conversion at `epochUnit`; otherwise (`epochUnit` None) string parse
+    * with coercion. The decision comes from a [[Probe]] of the raw column,
+    * so this is a lazy transform that starts no Spark job.
     */
-  def parseTimestampColumn(df: DataFrame, colName: String = "timestamp"): DataFrame =
+  def parseTimestampColumn(df: DataFrame, colName: String,
+      epochUnit: Option[String]): DataFrame =
     if (!df.columns.contains(colName))
       df.withColumn(colName, lit(null).cast("timestamp"))
-    else if (looksNumeric(df, colName)) {
-      val unit = detectEpochUnit(df, colName)
-      df.withColumn(colName, epochToTimestamp(col(colName), unit, df.schema(colName).dataType))
-    } else
-      df.withColumn(colName, stringToTimestamp(col(colName).cast("string")))
+    else epochUnit match {
+      case Some(unit) =>
+        df.withColumn(colName, epochToTimestamp(col(colName), unit, df.schema(colName).dataType))
+      case None =>
+        df.withColumn(colName, stringToTimestamp(col(colName).cast("string")))
+    }
 }

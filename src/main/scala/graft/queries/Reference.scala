@@ -122,7 +122,8 @@ object ReferenceQueries {
     * a reader-derived long — a unit the reader itself manufactured
     * (vacuous). Instead: synthesize genuine epoch columns at s/ms/us/ns
     * magnitudes from the real timestamps, run T1's median-magnitude
-    * detection on each (ONE fused aggregation pass — detectEpochUnits),
+    * detection on each (ONE aggregation pass of the Timestamps.Probe
+    * counters the pipeline's pre-gate profile carries — detectEpochUnits),
     * convert each back with its DETECTED unit (T3's exact long paths), and
     * emit both the detected units and the round-tripped epoch-µs. A wrong
     * detection shifts the µs values by 1000× and flips the unit literals, so

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.ActiveJobs
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM — Spark session
@@ -19,8 +22,34 @@ object SparkTestSession {
   }
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp dir, deleted with everything under it after the suite. */
+  def tmpDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tmpDirs.add(d.toFile)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tmpDirs.forEach(org.apache.commons.io.FileUtils.deleteDirectory(_))
+    finally super.afterAll()
+
+  /** Spark jobs started while `body` runs, bus drained on both sides. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    ActiveJobs.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; ActiveJobs.drain(sc) } finally sc.removeSparkListener(listener)
+    started.get
+  }
 
   def collectSingle[T](df: DataFrame): T =
     df.collect().head.getAs[T](0)

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 class CompactionSpec extends SparkSpec {
 
   test("compactParquet merges small files to the byte-derived count without losing rows") {
-    val in  = java.nio.file.Files.createTempDirectory("compact_in").toString
-    val out = java.nio.file.Files.createTempDirectory("compact_out").toString
+    val in  = tmpDir("compact_in").toString
+    val out = tmpDir("compact_out").toString
     // 32 tiny files of ~equal size
     spark.range(10000).select(col("id"), md5(col("id").cast("string")).as("h"))
       .repartition(32).write.mode("overwrite").parquet(in)

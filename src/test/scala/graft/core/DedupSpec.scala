@@ -30,32 +30,6 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.keepFirst(df, Seq("missing"), "id").count() == 2)
   }
 
-  test("keepFirstAgg == keepFirst on a hot-key distribution, via two-phase agg not a window") {
-    // 50k rows on ONE key + a scattered tail incl. a null key — the shape
-    // where a ranking window funnels everything through a single reducer
-    val hot = spark.range(50000).select(
-      lit("hot").as("user"), lit("a").as("typ"),
-      (col("id") + 100).as("id"), (col("id") % 97).cast("double").as("v"))
-    val tail = Seq(
-      (3L, "u1", "b", 30.0), (1L, "u1", "b", 10.0),
-      (2L, null.asInstanceOf[String], "a", 20.0),
-      (7L, null.asInstanceOf[String], "a", 70.0)
-    ).toDF("id", "user", "typ", "v").select("user", "typ", "id", "v")
-    val df = hot.union(tail).repartition(11)
-
-    val viaWindow = Dedup.keepFirst(df, Seq("user", "typ"), "id")
-      .select("user", "typ", "id", "v").orderBy("id")
-    val viaAgg = Dedup.keepFirstAgg(df, Seq("user", "typ"), "id")
-      .select("user", "typ", "id", "v").orderBy("id")
-    assert(viaAgg.collect().toSeq == viaWindow.collect().toSeq)
-    assert(viaAgg.count() == 3) // hot-first, u1-first, null-key-first
-
-    // the plan must be the two-phase aggregate + join, never a window sort
-    val plan = viaAgg.queryExecution.executedPlan.toString
-    assert(plan.contains("HashAggregate"), s"expected partial+final agg in:\n$plan")
-    assert(!plan.contains("Window"), s"window leaked into the skew-safe path:\n$plan")
-  }
-
   test("keepFirstByIngestOrder on in-memory data keeps first occurrence") {
     val df = Dedup.stampIngestOrder(Seq(
       ("2024-01-01", "addr1", "sale", 10.0), // first occurrence — must win
@@ -73,7 +47,7 @@ class DedupSpec extends SparkSpec {
     // Split packing sorts by size desc, so the big file lands in partition 0
     // and a bare monotonically_increasing_id would call its rows "first".
     // The (file, block, pos) stamp must still rank a0.csv's rows first.
-    val dir: Path = Files.createTempDirectory("dedup_files")
+    val dir: Path = tmpDir("dedup_files")
     Files.writeString(dir.resolve("a0.csv"),
       "timestamp,receiving_address,transaction_type,amount\n" +
         "2024-01-01,dup,sale,10.0\n")
@@ -95,7 +69,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ingest stamp reconstructs row order when one file is split into many blocks") {
-    val dir: Path = Files.createTempDirectory("dedup_splits")
+    val dir: Path = tmpDir("dedup_splits")
     val sb = new StringBuilder("id,payload\n")
     (0 until 2000).foreach(i => sb ++= s"$i,xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx$i\n")
     Files.writeString(dir.resolve("one.csv"), sb.toString)

@@ -29,7 +29,7 @@ class DifferentialRefSpec extends SparkSpec {
     Process(Seq("python3", "-c", "import pandas, duckdb")).! == 0
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tmpDir(prefix).toString
 
   /** Run the reference flow on `csv` with CWD `workdir`; returns exit code
     * (0 pass / 1 missing input / 2 gate).
@@ -149,7 +149,7 @@ class DifferentialRefSpec extends SparkSpec {
 
   test("pass branch: curated CSVs and both DQ JSONs match the reference") {
     assume(pythonOk, "driver-side python3/pandas/duckdb not available")
-    val csv = writeSharedCsv(Files.createTempDirectory("diff_in"))
+    val csv = writeSharedCsv(tmpDir("diff_in"))
     val refDir = tmp("diff_ref")
     val ourData = tmp("diff_data"); val ourCur = tmp("diff_cur")
 
@@ -165,7 +165,7 @@ class DifferentialRefSpec extends SparkSpec {
 
   test("pre-gate breach: both engines exit 2 with identical pre DQ") {
     assume(pythonOk, "driver-side python3/pandas/duckdb not available")
-    val dir = Files.createTempDirectory("diff_prefail")
+    val dir = tmpDir("diff_prefail")
     val sb = new StringBuilder(
       "timestamp,transaction_type,amount,receiving_address,location_region,risk_score\n")
     (0 until 45).foreach(i => sb ++= s"${1700000000L + i},sale,${i}.0,a$i,eu,0.1\n")
@@ -184,7 +184,7 @@ class DifferentialRefSpec extends SparkSpec {
 
   test("post-gate breach (threshold 1.01): both publish FIRST, then exit 2") {
     assume(pythonOk, "driver-side python3/pandas/duckdb not available")
-    val csv = writeSharedCsv(Files.createTempDirectory("diff_in3"))
+    val csv = writeSharedCsv(tmpDir("diff_in3"))
     val refDir = tmp("diff_ref3")
     val ourData = tmp("diff_data3"); val ourCur = tmp("diff_cur3")
 
@@ -239,7 +239,7 @@ class DifferentialRefSpec extends SparkSpec {
     sb ++= s"${1700000902000L},sale,abc,addrX,eu,0.50\n"   // unparseable
     sb ++= s",sale,6.0,addrY,eu,0.60\n"                    // null timestamp
     sb ++= s"${1700000903000L},None,7.0,addrZ,eu,0.70\n"   // NA-token type
-    val dir = Files.createTempDirectory("diff_fuzz")
+    val dir = tmpDir("diff_fuzz")
     val csv = dir.resolve("fuzz.csv")
     Files.writeString(csv, sb.toString)
 
@@ -324,7 +324,7 @@ class DifferentialRefSpec extends SparkSpec {
     // 6 null + 1 unparseable amount, 1 negative, 1 null ts = 9/400 →
     // conformity 0.9775 < 0.98 at every seed
     val csv = writeBreachCsv(new scala.util.Random(seed),
-      Files.createTempDirectory("diff_prebr"), nullAmounts = 6)
+      tmpDir("diff_prebr"), nullAmounts = 6)
     val refDir = tmp("diff_refpb")
     val ourData = tmp("diff_datapb"); val ourCur = tmp("diff_curpb")
     assert(runReference(csv, refDir) == 2)
@@ -342,7 +342,7 @@ class DifferentialRefSpec extends SparkSpec {
     // 3 planted fails (1 bad + 1 negative amount + 1 null ts) = 3/400 →
     // pre conformity 0.9925 ≥ 0.98 passes; post trips only on threshold
     val csv = writeBreachCsv(new scala.util.Random(seed),
-      Files.createTempDirectory("diff_postbr"), nullAmounts = 0)
+      tmpDir("diff_postbr"), nullAmounts = 0)
     val refDir = tmp("diff_refob")
     val ourData = tmp("diff_dataob"); val ourCur = tmp("diff_curob")
     assert(runReference(csv, refDir, "MIN_CONFORMITY_POST" -> "1.01") == 2)

@@ -12,19 +12,12 @@ import org.apache.spark.storage.StorageLevel
   * fixture stamp, two entries, release on eviction, drop stale entries,
   * leave nothing behind a failed build.
   */
-class FixtureMemoSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class FixtureMemoSpec extends SparkSpec {
   import spark.implicits._
-
-  private val fixtures = scala.collection.mutable.ListBuffer.empty[File]
-
-  override def afterAll(): Unit =
-    try fixtures.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    finally super.afterAll()
 
   /** A fixture dir holding one small table `t.parquet`. */
   private def fixture(): String = {
-    val dir = Files.createTempDirectory("graft_fixturememo").toFile
-    fixtures += dir
+    val dir = tmpDir("graft_fixturememo")
     Seq(1, 2, 3).toDF("x").write.parquet(s"$dir/t.parquet")
     dir.toString
   }

@@ -1,10 +1,6 @@
 package graft.core
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import org.apache.spark.ActiveJobs
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 
 /** `Io.table` takes its schema from one driver-side footer read instead of
@@ -12,37 +8,11 @@ import org.apache.spark.sql.AnalysisException
   * `spark.read.parquet` infers (metadata included), building a fixture
   * read must start no Spark job, and a bad path must fail as before.
   */
-class IoSchemaSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class IoSchemaSpec extends SparkSpec {
 
   private val sfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
-
-  private val tmpDirs = scala.collection.mutable.ListBuffer.empty[java.io.File]
-
-  private def tmpDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_ioschema").toFile
-    tmpDirs += d
-    d.toString
-  }
-
-  override def afterAll(): Unit = {
-    tmpDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    super.afterAll()
-  }
-
-  /** Spark jobs started while `body` runs, bus drained on both sides. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    ActiveJobs.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; ActiveJobs.drain(sc) } finally sc.removeSparkListener(listener)
-    started.get
-  }
 
   test("every fixture table reads with the schema Spark infers, metadata included") {
     for (sf <- sfDirs; t <- tables)
@@ -65,7 +35,7 @@ class IoSchemaSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("a table Spark wrote as a directory (_SUCCESS, crc files) reads with the same schema") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft_ioschema").toString
     val path = s"$dir/lineitem.parquet"
     Io.table(spark, sfDirs.head, "lineitem").repartition(3).write.parquet(path)
     assert(new java.io.File(s"$path/_SUCCESS").isFile)
@@ -78,7 +48,7 @@ class IoSchemaSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("a missing table or a directory without data still throws AnalysisException") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft_ioschema").toString
     intercept[AnalysisException](Io.table(spark, dir, "no_such_table"))
     assert(new java.io.File(s"$dir/empty.parquet").mkdir())
     intercept[AnalysisException](Io.table(spark, dir, "empty"))

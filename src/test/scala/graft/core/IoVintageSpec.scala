@@ -19,30 +19,14 @@ import org.apache.spark.sql.types._
   * the one Spark refuses with PARQUET_TYPE_ILLEGAL unless the session reads
   * nanos as longs, so `Io.eventsUnderlying`'s retry runs here.
   */
-class IoVintageSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class IoVintageSpec extends SparkSpec {
 
   // 2024-01-01T00:00:07.179575Z in each unit; second row exercises a
   // non-zero sub-ms µs remainder.
   private val micros = Seq(1704067207179575L, 1704067432824425L)
 
-  // deleteOnExit can't remove a non-empty directory, so the parquet written
-  // under it would leak each run — track the dirs and delete recursively.
-  private val tmpDirs = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_vintage_$name")
-    tmpDirs += d
-    s"$d/events.parquet"
-  }
-
-  override def afterAll(): Unit = {
-    tmpDirs.foreach { d =>
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-    super.afterAll()
-  }
+  private def tmp(name: String): String =
+    s"${tmpDir(s"graft_vintage_$name")}/events.parquet"
 
   private def writeVintage(path: String, tsCol: org.apache.spark.sql.Column,
       tsType: DataType): Unit = {
@@ -109,8 +93,7 @@ class IoVintageSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     * tables are the sf0.001 fixture's, so every table x109 audits exists.
     */
   private def nanosFixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vintage_nsdir")
-    tmpDirs += dir
+    val dir = tmpDir("graft_vintage_nsdir")
     for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings"))
       java.nio.file.Files.copy(

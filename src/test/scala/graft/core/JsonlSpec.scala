@@ -3,7 +3,6 @@ package graft.core
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** JSONL source/sink: lossless roundtrip (including array<float> embedding
   * columns), schema-first reads with no inference scan, null fill for
@@ -18,7 +17,7 @@ class JsonlSpec extends SparkSpec {
     StructField("emb", ArrayType(FloatType))))
 
   test("roundtrip preserves rows, types, and float arrays; gzip parts are written") {
-    val dir = Files.createTempDirectory("jsonl").toString + "/docs"
+    val dir = tmpDir("jsonl").toString + "/docs"
     val in = Seq(
       (0L, "alpha beta", Array(0.5f, -1.25f)),
       (1L, "gamma", Array(2.0f, 3.5f)),
@@ -35,7 +34,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("missing fields read as null; extra fields are ignored; corrupt lines are captured") {
-    val dir = Files.createTempDirectory("jsonl2").toString
+    val dir = tmpDir("jsonl2").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/part.json"),
       """{"doc_id": 1, "text": "ok", "extra": 99}
         |{"doc_id": 2}

@@ -1,7 +1,6 @@
 package graft.core
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 /** ORC source/sink: lossless roundtrip (types, nulls, float arrays kept
   * bit-identical) and footer-schema reads — the splittable columnar
@@ -11,7 +10,7 @@ class OrcSpec extends SparkSpec {
   import spark.implicits._
 
   test("roundtrip preserves rows, schema, nulls, and float arrays") {
-    val dir = Files.createTempDirectory("orc").toString + "/docs"
+    val dir = tmpDir("orc").toString + "/docs"
     val in = Seq(
       (0L, "alpha beta", Array(0.5f, -1.25f)),
       (1L, "gamma", Array(2.0f, 3.5f)),
@@ -32,7 +31,7 @@ class OrcSpec extends SparkSpec {
   }
 
   test("x58 aggregate over the ORC read-back equals the same aggregate over the source") {
-    val dir = Files.createTempDirectory("orc58").toString
+    val dir = tmpDir("orc58").toString
     val docs = Seq(
       (0L, "a b", "en", "s0", 3L),
       (1L, "c d e", "en", "s1", 5L),

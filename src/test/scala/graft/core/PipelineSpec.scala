@@ -16,13 +16,13 @@ import java.nio.file.{Files, Path, Paths}
 
 /** End-to-end flow over a synthesized dirty fraud CSV (FIXTURES.md §A):
   * pass branch, pre-gate fail branch (raw_snapshot then throw), post-gate
-  * publish-before-throw, dirty-header asymmetry, and CLI exit codes
-  * (reference /root/reference/flows/pipeline.py:222-268).
+  * publish-before-throw, dirty-header asymmetry, hostile timestamp columns,
+  * and CLI exit codes (reference /root/reference/flows/pipeline.py:222-268).
   */
 class PipelineSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tmpDir(prefix).toString
 
   private def cachedEntries(): Int = CacheEntries.count(spark)
 
@@ -107,7 +107,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pass branch: clean, dedup, publish; named single-file CSV exports") {
-    val in  = writePassCsv(Files.createTempDirectory("pipe_in"))
+    val in  = writePassCsv(tmpDir("pipe_in"))
     val data = tmp("pipe_data"); val curated = tmp("pipe_curated")
     val cached = cachedEntries()
     val res = Pipeline.run(spark, in, data, curated)
@@ -147,7 +147,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pre-gate fail: raw_snapshot published, then QualityGateException") {
-    val dir = Files.createTempDirectory("pipe_prefail")
+    val dir = tmpDir("pipe_prefail")
     val sb  = new StringBuilder(
       "timestamp,transaction_type,amount,receiving_address,location_region,risk_score\n")
     (0 until 40).foreach(i => sb ++= s"${1700000000L + i},sale,${i}.0,a$i,eu,0.1\n")
@@ -155,12 +155,20 @@ class PipelineSpec extends SparkSpec {
     val in = dir.resolve("bad.csv"); Files.writeString(in, sb.toString)
     val data = tmp("pipe_data2"); val curated = tmp("pipe_curated2")
 
-    val e = intercept[Quality.QualityGateException] {
-      Pipeline.run(spark, in.toString, data, curated)
-    }
-    // clean's epoch-unit probes ran beside the pre profile: none outlives run
-    assert(activeJobs().isEmpty)
+    var e: Quality.QualityGateException = null
+    val actions = executions {
+      e = intercept[Quality.QualityGateException] {
+        Pipeline.run(spark, in.toString, data, curated)
+      }
+      assert(activeJobs().isEmpty) // no job outlives run
+    }.map(_._1)
     assert(e.getMessage.contains("pre_clean"))
+    // the pre profile, clean's timestamp probe inside it, is the only action
+    // that scans the CSV before the snapshot
+    val snapshot = actions.indexWhere(_.logical.toString.contains("raw_snapshot"))
+    assert(snapshot >= 0, "no raw_snapshot write")
+    val scans = actions.take(snapshot).filter(qe => has(Seq(qe.executedPlan))(scansCsv))
+    assert(scans.size == 1, s"${scans.size} actions scan the CSV before raw_snapshot")
     // inspection artifacts were published BEFORE the throw (pipeline.py:236-247)
     assert(new java.io.File(s"$data/raw_snapshot").isDirectory)
     assert(Files.exists(java.nio.file.Paths.get(s"$data/dq_metrics_pre.json")))
@@ -170,7 +178,7 @@ class PipelineSpec extends SparkSpec {
     // Cleaning drops every rule-violating row, so post conformity is exactly
     // 1.0 on any input — in the reference too, the post gate only trips via
     // threshold config. Threshold > 1 exercises the publish-then-fail order.
-    val in = writePassCsv(Files.createTempDirectory("pipe_in3"))
+    val in = writePassCsv(tmpDir("pipe_in3"))
     val data = tmp("pipe_data3"); val curated = tmp("pipe_curated3")
     val cached = cachedEntries()
     intercept[Quality.QualityGateException] {
@@ -183,9 +191,9 @@ class PipelineSpec extends SparkSpec {
 
   test("sink failure: every sink runs, the first failure wins, nothing outlives run") {
     // curatedDir is a regular file, so both CSV exports fail when they write
-    val in = writePassCsv(Files.createTempDirectory("pipe_sinkfail"))
+    val in = writePassCsv(tmpDir("pipe_sinkfail"))
     val data = tmp("pipe_data_sf")
-    val curated = Files.createTempFile("pipe_curated_sf", ".file").toString
+    val curated = Files.createFile(tmpDir("pipe_curated_sf").resolve("curated")).toString
     val cached = cachedEntries()
     var thrown: Throwable = null
     val failed = executions {
@@ -219,7 +227,7 @@ class PipelineSpec extends SparkSpec {
     // none of the rule columns match " Timestamp "/"AMOUNT", so the pre gate
     // passes even though half the amounts are null. String timestamps take
     // the try_to_timestamp path (T4).
-    val dir = Files.createTempDirectory("pipe_hdr")
+    val dir = tmpDir("pipe_hdr")
     val sb = new StringBuilder(
       " Timestamp ,Transaction Type,AMOUNT,Receiving Address,Location Region,Risk Score\n")
     (0 until 20).foreach(i =>
@@ -238,7 +246,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("CLI exit codes: 0 pass, 1 missing input, 2 gate breach") {
-    val in = writePassCsv(Files.createTempDirectory("pipe_cli"))
+    val in = writePassCsv(tmpDir("pipe_cli"))
     assert(PipelineMain.runCli(spark, in, tmp("d0"), tmp("c0"), 0.98, 0.995) == 0)
     assert(PipelineMain.runCli(spark, "/nonexistent/nope.csv",
       tmp("d1"), tmp("c1"), 0.98, 0.995) == 1)
@@ -246,7 +254,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pass branch computes the cleaned frame once; every output reads the cache") {
-    val in = writePassCsv(Files.createTempDirectory("pipe_once"))
+    val in = writePassCsv(tmpDir("pipe_once"))
     val plans = executedPlans(Pipeline.run(spark, in, tmp("d_once"), tmp("c_once")))
     val computed = computedPlans(plans)
 
@@ -266,16 +274,12 @@ class PipelineSpec extends SparkSpec {
         s"action $i reads no cached frame:\n${plans(i)}")
     }
 
-    // Only the post profile scans the CSV and runs clean's keep-first
-    // window after the pre-gate. (The epoch-unit median inside clean also
-    // scans the CSV, for the raw timestamp column alone, before the cleaned
-    // frame exists.)
-    val keepFirst: PartialFunction[SparkPlan, Boolean] = {
-      case p if p.output.exists(_.name == "_kf_rn") => true
-    }
-    val cleans = plans.indices.drop(pre + 1)
-      .filter(i => has(computed(i))(scansCsv) && has(computed(i))(keepFirst))
-    assert(cleans == Seq(post))
+    // The CSV is scanned twice: by the pre profile (clean's timestamp probe
+    // rides in it) and by the post profile, which runs clean's keep-first
+    // window as it fills the cache.
+    val scans = plans.indices.filter(i => has(computed(i))(scansCsv))
+    assert(scans == Seq(pre, post), s"actions $scans scan the CSV")
+    assert(has(computed(post)) { case p => p.output.exists(_.name == "_kf_rn") })
 
     // the region aggregate and the top-3 each run once, not once per sink
     val regionAgg = plans.indices.filter(i => has(computed(i)) {
@@ -292,7 +296,7 @@ class PipelineSpec extends SparkSpec {
     // A 0-byte file has no columns, so it passes both gates and fails in the
     // region aggregate. runCli does not map that to an exit code: the
     // exception escapes PipelineMain.main, which exits 1.
-    val in = Files.createTempDirectory("pipe_empty").resolve("empty.csv")
+    val in = tmpDir("pipe_empty").resolve("empty.csv")
     Files.write(in, Array.emptyByteArray)
     val cached = cachedEntries()
     val e = intercept[AnalysisException] {
@@ -303,7 +307,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("header-only CSV: exit 0, zero-row DQ JSONs, header-only CSV exports") {
-    val in = Files.createTempDirectory("pipe_hdronly").resolve("hdr_only.csv")
+    val in = tmpDir("pipe_hdronly").resolve("hdr_only.csv")
     Files.writeString(in,
       "timestamp,transaction_type,amount,receiving_address,location_region,risk_score\n")
     val data = tmp("d_hdronly"); val curated = tmp("c_hdronly")
@@ -319,5 +323,54 @@ class PipelineSpec extends SparkSpec {
       java.util.List.of("location_region,avg_risk_score"))
     assert(lines("top3_recent_sales_by_receiving.csv") ==
       java.util.List.of("receiving_address,amount,timestamp"))
+  }
+
+  test("building the cleaned frame starts no Spark job") {
+    val raw = Pipeline.ingestCsv(spark, writePassCsv(tmpDir("pipe_lazy")))
+    assert(jobsDuring(Pipeline.clean(raw, Some("ms"))) == 0)
+    assert(jobsDuring(Pipeline.clean(raw, None)) == 0)
+  }
+
+  /** A CSV of `timestamps` under `tsHeader`, each row otherwise valid. */
+  private def hostileCsv(prefix: String, tsHeader: String, timestamps: Seq[String]): String = {
+    val f = tmpDir(prefix).resolve("hostile.csv")
+    val header =
+      s"$tsHeader,transaction_type,amount,receiving_address,location_region,risk_score"
+    val rows = timestamps.zipWithIndex.map { case (ts, i) => s"$ts,sale,$i.5,a$i,eu,0.1" }
+    Files.writeString(f, (header +: rows).mkString("", "\n", "\n"))
+    f.toString
+  }
+
+  private def cli(in: String, minPre: Double = 0.98): Int =
+    PipelineMain.runCli(spark, in, tmp("d_hostile"), tmp("c_hostile"), minPre, 0.995)
+
+  test("hostile: two headers that normalize to timestamp") {
+    // " Timestamp " and "timestamp" both become `timestamp` (SURVEY P1,
+    // pipeline.py:118). Neither is probed, so the pre profile runs; with a
+    // passing gate clean's ambiguous reference escapes runCli (no exit code
+    // maps it), with a breaching gate the gate wins: exit 2 (SURVEY C2).
+    val in = hostileCsv("pipe_dup_ts", " Timestamp ,timestamp",
+      (0 until 20).map(i => s"${1700000000L + i},${1700000000L + i}"))
+    val e = intercept[AnalysisException](cli(in))
+    assert(e.getCondition == "AMBIGUOUS_REFERENCE", e.getMessage)
+    assert(cli(in, minPre = 1.01) == 2)
+  }
+
+  test("hostile: an all-null timestamp column breaches the pre-gate, exit 2") {
+    // every timestamp_not_null check fails: conformity 0 < 0.98 → exit 2
+    // (SURVEY C2, README.md:51)
+    val in = hostileCsv("pipe_null_ts", "timestamp", Seq.fill(20)(""))
+    assert(cli(in) == 2)
+  }
+
+  test("hostile: digit strings mixed with datetimes take the string path, exit 0") {
+    // not every value matches ^\d+(\.\d+)?$ (SURVEY T2), so the column
+    // parses as datetime strings and the digit string coerces to null
+    // (SURVEY T4); clean drops those rows and both gates pass: exit 0
+    val timestamps = (0 until 10).map(i => s"2024-01-02 00:00:0$i") :+ "1700000000"
+    val data = tmp("d_mixed_ts")
+    assert(PipelineMain.runCli(spark, hostileCsv("pipe_mixed_ts", "timestamp", timestamps),
+      data, tmp("c_mixed_ts"), 0.98, 0.995) == 0)
+    assert(spark.read.parquet(s"$data/stg_transactions").count() == 10)
   }
 }

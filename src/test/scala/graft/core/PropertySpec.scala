@@ -30,6 +30,14 @@ class PropertySpec extends SparkSpec {
     rows.toDF("id", "timestamp", "transaction_type", "amount", "receiving_address")
   }
 
+  /** `Pipeline.clean` with the timestamp decision its probe takes on `df`. */
+  private def cleaned(df: DataFrame): DataFrame = {
+    val unit = Timestamps.rawProbe(df, "timestamp").flatMap { p =>
+      p.epochUnit(df.agg(p.aggs.head, p.aggs.tail: _*).first())
+    }
+    Pipeline.clean(df, unit)
+  }
+
   test("keepFirst: idempotent, one row per key, output subset of input, lowest order key wins") {
     val keys = Seq("timestamp", "receiving_address", "transaction_type", "amount")
     for (_ <- 1 to 5) {
@@ -46,20 +54,6 @@ class PropertySpec extends SparkSpec {
       val minIds = df.groupBy(keys.map(col): _*).agg(min("id").as("id"))
       assert(once.select((col("id") +: keys.map(col)): _*)
         .except(minIds.select((col("id") +: keys.map(col)): _*)).isEmpty)
-    }
-  }
-
-  test("keepFirstAgg == keepFirst on random frames (nulls, dups, skew included)") {
-    val keys = Seq("timestamp", "receiving_address", "transaction_type", "amount")
-    for (_ <- 1 to 5) {
-      val df = randomFrame(100 + rnd.nextInt(100)).repartition(5)
-      val viaWindow = Dedup.keepFirst(df, keys, "id")
-      val viaAgg    = Dedup.keepFirstAgg(df, keys, "id")
-      // set equality both directions: the skew-safe path must produce
-      // EXACTLY the window path's rows, including null-keyed groups
-      assert(viaAgg.except(viaWindow).isEmpty && viaWindow.except(viaAgg).isEmpty,
-        "keepFirstAgg diverged from keepFirst")
-      assert(viaAgg.count() == viaWindow.count())
     }
   }
 
@@ -82,8 +76,8 @@ class PropertySpec extends SparkSpec {
           .withColumn("location_region",
             when(pmod(rand(5) * 3, lit(3)).cast("int") === 0, lit("0")).otherwise(lit("eu")))
           .withColumn("risk_score", rand(7) * 10))
-      val once  = Pipeline.clean(raw)
-      val twice = Pipeline.clean(once)
+      val once  = cleaned(raw)
+      val twice = cleaned(once)
       assert(twice.count() == once.count())
       val cols = Seq("transaction_type", "amount", "receiving_address", "location_region")
       assert(twice.select(cols.map(col): _*).except(once.select(cols.map(col): _*)).isEmpty)

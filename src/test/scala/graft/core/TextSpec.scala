@@ -1,7 +1,6 @@
 package graft.core
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 /** Plain-text TSV source/sink: lossless roundtrip of the documents shape,
   * including TABS inside the text column (text rides last; the reader
@@ -14,7 +13,7 @@ class TextSpec extends SparkSpec {
   import spark.implicits._
 
   test("roundtrip preserves rows and types; in-text tabs survive the limit-split") {
-    val dir = Files.createTempDirectory("txt").toString + "/docs"
+    val dir = tmpDir("txt").toString + "/docs"
     val in = Seq(
       (0L, "plain words only", "en", "src0", 16L),
       (1L, "text\twith\ttabs inside", "de", "src1", 21L),
@@ -34,7 +33,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("documented boundary: an embedded newline splits the record (line IS the record)") {
-    val dir = Files.createTempDirectory("txtnl").toString + "/docs"
+    val dir = tmpDir("txtnl").toString + "/docs"
     Io.writeText(Seq((0L, "line one\nline two", "en", "s", 17L))
       .toDF("doc_id", "text", "lang", "source", "n_chars"), dir)
     val back = Io.readText(spark, dir).collect()

@@ -1,18 +1,26 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
 /** T1–T4 semantics: unit thresholds at the 1e11/1e14/1e17 boundaries,
-  * numeric-looking vacuity, exact long ns→µs truncation, string coercion
-  * (reference /root/reference/flows/pipeline.py:25-37,130-141).
+  * the exact lower median, numeric-looking vacuity, exact long ns→µs
+  * truncation, string coercion (reference
+  * /root/reference/flows/pipeline.py:25-37,130-141).
   */
 class TimestampsSpec extends SparkSpec {
   import spark.implicits._
 
   private def unitOf(vals: Seq[java.lang.Double]): String =
-    Timestamps.detectEpochUnit(vals.toDF("ts"), "ts")
+    Timestamps.detectEpochUnits(vals.toDF("ts"), Seq("ts"))("ts")
+
+  /** The probe's decision for column `ts`, from its own aggregate row. */
+  private def epochUnit(df: DataFrame): Option[String] = {
+    val probe = new Timestamps.Probe("ts", df.schema("ts").dataType)
+    probe.epochUnit(df.agg(probe.aggs.head, probe.aggs.tail: _*).first())
+  }
 
   test("detectEpochUnit thresholds are strict greater-than") {
     assert(unitOf(Seq(1.7e9)) == "s")    // 2023 in seconds
@@ -30,6 +38,9 @@ class TimestampsSpec extends SparkSpec {
   test("detectEpochUnit: median over mixed magnitudes; abs() applied") {
     assert(unitOf(Seq(1.7e9, 1.7e9, 1.7e18)) == "s")  // median picks majority
     assert(unitOf(Seq(-1.7e12, -1.7e12, 1.0)) == "ms") // abs before median
+    // an even count takes the lower median
+    assert(unitOf(Seq(1.7e9, 1.7e12)) == "s")
+    assert(unitOf(Seq(1.7e12, 1.7e9, 1.7e12, 1.7e12)) == "ms")
   }
 
   test("detectEpochUnit: empty / all-null defaults to seconds") {
@@ -38,13 +49,25 @@ class TimestampsSpec extends SparkSpec {
   }
 
   test("looksNumeric: numeric dtype, digit strings, vacuous empty") {
-    import org.apache.spark.sql.DataFrame
-    def ln(df: DataFrame) = Timestamps.looksNumeric(df, "ts")
-    assert(ln(Seq(1L, 2L).toDF("ts")))
-    assert(ln(Seq("1700000000", "1700000001.5").toDF("ts")))
-    assert(!ln(Seq("2024-01-01", "123").toDF("ts")))
-    assert(ln(Seq.empty[String].toDF("ts")))            // pandas .all() vacuity
-    assert(ln(Seq(null.asInstanceOf[String]).toDF("ts")))
+    assert(epochUnit(Seq(1L, 2L).toDF("ts")) == Some("s"))
+    assert(epochUnit(Seq("1700000000", "1700000001.5").toDF("ts")) == Some("s"))
+    assert(epochUnit(Seq("1700000000000", "x").toDF("ts")) == None)
+    assert(epochUnit(Seq("2024-01-01", "123").toDF("ts")) == None)
+    assert(epochUnit(Seq.empty[String].toDF("ts")) == Some("s")) // pandas .all() vacuity
+    assert(epochUnit(Seq(null.asInstanceOf[String]).toDF("ts")) == Some("s"))
+  }
+
+  test("looksNumeric on a string column, read from the DQ profile's fused row") {
+    val df = Seq(("1700000000000", -1.0), ("1700000001000", 2.0), (null, 3.0))
+      .toDF(" Timestamp ", "amount")
+    val probe = new Timestamps.Probe(" Timestamp ", df.schema(" Timestamp ").dataType)
+    val (m, row) = Quality.profile(df, "pre", probe.aggs)
+    assert(m.totalRows == 3 && m.failedRowsEstimate == 1) // the negative amount
+    assert(probe.epochUnit(row) == Some("ms"))
+
+    val mixed = Seq(("1700000000000", 1.0), ("2024-01-01 00:00:00", 2.0))
+      .toDF(" Timestamp ", "amount")
+    assert(probe.epochUnit(Quality.profile(mixed, "pre", probe.aggs)._2) == None)
   }
 
   test("epochToTimestamp long paths are exact, ns truncates to µs") {
@@ -79,18 +102,19 @@ class TimestampsSpec extends SparkSpec {
   }
 
   test("parseTimestampColumn: missing column synthesizes all-null timestamps") {
-    val out = Timestamps.parseTimestampColumn(Seq(1).toDF("x"), "timestamp")
+    val out = Timestamps.parseTimestampColumn(Seq(1).toDF("x"), "timestamp", Some("s"))
     assert(out.schema("timestamp").dataType.typeName == "timestamp")
     assert(out.select("timestamp").collect().head.isNullAt(0))
   }
 
   test("parseTimestampColumn: numeric column detects unit; string column parses") {
-    val num = Timestamps.parseTimestampColumn(Seq(1700000000L).toDF("timestamp"))
-    assert(collectSingle[Long](num.select(unix_micros(col("timestamp"))))
+    val nums = Seq(1700000000L).toDF("ts")
+    val num = Timestamps.parseTimestampColumn(nums, "ts", epochUnit(nums))
+    assert(collectSingle[Long](num.select(unix_micros(col("ts"))))
       == 1700000000000000L)
-    val str = Timestamps.parseTimestampColumn(
-      Seq("2024-01-02 03:04:05", "bogus").toDF("timestamp"))
-    assert(col0(str.select(col("timestamp")))
+    val strs = Seq("2024-01-02 03:04:05", "bogus").toDF("ts")
+    val str = Timestamps.parseTimestampColumn(strs, "ts", epochUnit(strs))
+    assert(col0(str.select(col("ts")))
       == Seq(Timestamp.valueOf("2024-01-02 03:04:05"), null))
   }
 }

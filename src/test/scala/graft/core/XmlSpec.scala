@@ -1,7 +1,6 @@
 package graft.core
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 /** XML source/sink (Spark 4's built-in xml format): lossless roundtrip
   * including markup escaping, schema-on-read (no inference pass), and the
@@ -14,7 +13,7 @@ class XmlSpec extends SparkSpec {
   import spark.implicits._
 
   test("roundtrip preserves rows, types, nulls, and escapes markup") {
-    val dir = Files.createTempDirectory("xml").toString + "/docs"
+    val dir = tmpDir("xml").toString + "/docs"
     val in = Seq(
       (0L, "alpha <beta> & \"gamma\"", "en", 21L),
       (1L, "plain text", "de", 10L),
@@ -34,7 +33,7 @@ class XmlSpec extends SparkSpec {
   }
 
   test("wire contract: empty string and null stay distinct (documented in Io.readXml)") {
-    val dir = Files.createTempDirectory("xmlnull").toString + "/docs"
+    val dir = tmpDir("xmlnull").toString + "/docs"
     val in = Seq((0L, ""), (1L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
     Io.writeXml(in, dir)
@@ -46,7 +45,7 @@ class XmlSpec extends SparkSpec {
   }
 
   test("x121 aggregate over the XML read-back equals the same aggregate over the source") {
-    val dir = Files.createTempDirectory("xml121").toString
+    val dir = tmpDir("xml121").toString
     val docs = Seq(
       (0L, "a b", "en", "s0", 3L),
       (1L, "c d & e", "en", "s1", 7L),
