@@ -70,14 +70,17 @@ object Timestamps {
 
   /** The probe of the raw column that becomes `name` once names are
     * normalized ([[Normalize.normName]]). None when there is none (the
-    * column is synthesized all-null) or more than one (the ambiguous
-    * reference fails where it is converted), so a probe never fails the
-    * pass it rides in.
+    * column is synthesized all-null), more than one (the ambiguous
+    * reference fails where it is converted), or it is neither numeric nor
+    * string: CSV inference types dates and datetimes as DATE/TIMESTAMP,
+    * whose values never look numeric, so they take the string parse, and
+    * DATE has no cast to double. So a probe never fails the pass it rides in.
     */
   def rawProbe(raw: DataFrame, name: String): Option[Probe] =
     raw.schema.fields.filter(f => Normalize.normName(f.name) == name) match {
-      case Array(f) => Some(new Probe(f.name, f.dataType))
-      case _        => None
+      case Array(f) if f.dataType.isInstanceOf[NumericType] || f.dataType == StringType =>
+        Some(new Probe(f.name, f.dataType))
+      case _ => None
     }
 
   /** T1 over several columns in ONE aggregation job: r7 probes all four

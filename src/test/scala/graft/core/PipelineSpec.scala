@@ -373,4 +373,16 @@ class PipelineSpec extends SparkSpec {
       data, tmp("c_mixed_ts"), 0.98, 0.995) == 0)
     assert(spark.read.parquet(s"$data/stg_transactions").count() == 10)
   }
+
+  test("hostile: a date-only timestamp column takes the string path, exit 0") {
+    // CSV inference reads `2024-01-01` values as DATE, which is not numeric and
+    // does not look numeric (SURVEY T2); the dates parse as datetime
+    // strings at midnight (SURVEY T4) and both gates pass: exit 0
+    val data = tmp("d_date_ts")
+    val in = hostileCsv("pipe_date_ts", "timestamp", (1 to 9).map(d => s"2024-01-0$d"))
+    assert(spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(in).schema("timestamp").dataType == org.apache.spark.sql.types.DateType)
+    assert(PipelineMain.runCli(spark, in, data, tmp("c_date_ts"), 0.98, 0.995) == 0)
+    assert(spark.read.parquet(s"$data/stg_transactions").count() == 9)
+  }
 }

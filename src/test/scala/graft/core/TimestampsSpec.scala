@@ -70,6 +70,17 @@ class TimestampsSpec extends SparkSpec {
     assert(probe.epochUnit(Quality.profile(mixed, "pre", probe.aggs)._2) == None)
   }
 
+  test("rawProbe: one numeric or string column that normalizes to the name") {
+    def probed(df: DataFrame) = Timestamps.rawProbe(df, "timestamp").isDefined
+    assert(probed(Seq(1L).toDF(" Timestamp ")))
+    assert(probed(Seq("1").toDF("timestamp")))
+    assert(!probed(Seq(1L).toDF("x")))
+    assert(!probed(Seq((1L, 1L)).toDF(" Timestamp ", "timestamp")))
+    // DATE has no cast to double; neither it nor TIMESTAMP looks numeric
+    assert(!probed(Seq(1L).toDF("timestamp").select(current_date().as("timestamp"))))
+    assert(!probed(Seq(1L).toDF("timestamp").select(current_timestamp().as("timestamp"))))
+  }
+
   test("epochToTimestamp long paths are exact, ns truncates to µs") {
     val df = Seq(1700000000123456789L).toDF("v")
     def us(unit: String): Long =

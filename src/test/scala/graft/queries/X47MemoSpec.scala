@@ -10,21 +10,13 @@ import graft.SparkSpec
   * reuse, (b) invalidate when the fixture changes (mtime/size/file-count
   * stamp), and (c) keep the consumers' results identical to a fresh run.
   */
-class X47MemoSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
-
-  private val tmpDirs = scala.collection.mutable.ListBuffer.empty[java.io.File]
+class X47MemoSpec extends SparkSpec {
 
   private def copyFixture(): String = {
-    val dir = Files.createTempDirectory("x47memo").toString
-    tmpDirs += new java.io.File(dir)
+    val dir = tmpDir("x47memo").toString
     Files.copy(Paths.get("/root/testdata/sf0.001/documents.parquet"),
       Paths.get(s"$dir/documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir
-  }
-
-  override def afterAll(): Unit = {
-    tmpDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    super.afterAll()
   }
 
   test("x47 memo: second run is a hit; x104/x238 ride the same fixpoint") {
