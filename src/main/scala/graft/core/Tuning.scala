@@ -44,11 +44,14 @@ object Tuning {
       .getOrElse(withPf)
   }
 
-  /** The one SparkSession every main builds: local[cpus] with as many
-    * shuffle partitions, UTC session time, UI off, plus the env-gated AQE
-    * knobs above. `cpus` defaults to SPARK_GRAFT_CPUS, else 4. */
+  /** The one SparkSession every main and the test suite build: local[cpus]
+    * with as many shuffle partitions, UTC session time, UI off, graft's
+    * engine extensions installed (functions, `TopKRewrite`, `TopKPerKey`,
+    * the `DEDUP` parser), plus the env-gated AQE knobs above. `cpus`
+    * defaults to SPARK_GRAFT_CPUS, else 4. */
   def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession =
     adaptive(SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -1,17 +1,19 @@
 package graft.plans
 
 import graft.functions.{CharNgrams, CmsEstimate, FloatDot, MicroL2, MinhashAll, MinWindowMd5, MultiMatch, NfcNormalize, SpaceSavingTopK, StripAccents, UnicodeNorm}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionExtensionsProvider}
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Engine extension point: registers graft's native Catalyst expressions.
+/** Engine extension point: graft's native Catalyst expressions, the
+  * `TopKRewrite` optimizer rule, the `TopKPerKey` planner strategy and the
+  * `DEDUP` parser.
   *
-  * Two activation paths:
-  *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session build
-  *    (the standard SparkSessionExtensions mechanism), or
-  *  - `GraftExtensions.register(spark)` on a live session (used by the
-  *    declared queries, since the driver owns session construction).
+  * One activation path: the session is built with them
+  * (`graft.core.Tuning.session` calls `withExtensions`; the
+  * `spark.sql.extensions=graft.plans.GraftExtensions` conf is the same
+  * mechanism). A live session cannot gain them, and `newSession()` keeps
+  * them.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -69,18 +71,4 @@ object GraftExtensions {
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(children(0), children(1))))
 
   private type ExpressionInfoLike = org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  /** Idempotent runtime registration on an existing session: the
-    * functions, the TopKPerKey strategy, and the (conf-gated) window→top-k
-    * rewrite rule via the public `experimental` escape hatches.
-    */
-  def register(spark: SparkSession): Unit = {
-    functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-    TopKPerKey.register(spark)
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-  }
 }

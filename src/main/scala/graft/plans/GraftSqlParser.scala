@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.parser.{ParseException, ParserInterface}
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -53,10 +52,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
-    GraftSqlParser.rewrite(sqlText, delegate) match {
-      case Some(std) => delegate.parsePlan(std)
-      case None      => delegate.parsePlan(sqlText)
-    }
+    delegate.parsePlan(standard(sqlText))
+
+  // `spark.sql(text, args)` and `EXECUTE IMMEDIATE ... USING` parse through
+  // here; the trait's default would drop the parameter context.
+  override def parsePlanWithParameters(sqlText: String, ctx: ParameterContext): LogicalPlan =
+    delegate.parsePlanWithParameters(standard(sqlText), ctx)
+
+  private def standard(sqlText: String): String =
+    GraftSqlParser.rewrite(sqlText, delegate).getOrElse(sqlText)
 
   // Everything below is Spark's dialect, untouched.
   override def parseQuery(sqlText: String): LogicalPlan = delegate.parseQuery(sqlText)
@@ -80,7 +84,7 @@ object GraftSqlParser {
     """(?is)\A\s*DEDUP\s+(.+?)\s+BY\s+(.+?)\s+ORDER\s+BY\s+(.+?)\s*;?\s*\z""".r
 
   /** The rewritten standard-SQL form of a `DEDUP` statement, or None if
-    * `sqlText` is not one (→ callers fall through to the plain dialect).
+    * `sqlText` is not one (→ the parser passes the text through unchanged).
     * The table part must parse as a multipart identifier under `delegate`.
     */
   def rewrite(sqlText: String, delegate: ParserInterface): Option[String] =
@@ -98,23 +102,4 @@ object GraftSqlParser {
              |  FROM $tbl) WHERE __graft_rn = 1""".stripMargin)
       case _ => None
     }
-
-  /** Run `sqlText` on `spark`, honoring the DEDUP dialect whether or not
-    * the session was built with the extension: a session whose parser
-    * already understands the statement (built with
-    * `spark.sql.extensions=graft.plans.GraftExtensions`) executes it
-    * directly; otherwise the statement is rewritten here and the standard
-    * form is executed — same plan either way (the injected path IS the
-    * rewrite). Exists because the correctness driver owns session
-    * construction and `injectParser` has no runtime escape hatch (unlike
-    * functions/rules/strategies, a live session's parser is final).
-    */
-  def sql(spark: SparkSession, sqlText: String): DataFrame = {
-    val delegate = spark.sessionState.sqlParser
-    if (delegate.isInstanceOf[GraftSqlParser]) spark.sql(sqlText)
-    else rewrite(sqlText, delegate) match {
-      case Some(std) => spark.sql(std)
-      case None      => spark.sql(sqlText)
-    }
-  }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.PlanBridge
 
 /** Per-key top-k as a first-class physical operator — the whole-operator
   * custom-plan path (LogicalPlan + SparkStrategy + SparkPlan, activated
-  * through `spark.experimental.extraStrategies`).
+  * through `GraftExtensions`' `injectPlannerStrategy` at session build).
   *
   * WHY an operator instead of the window form: `row_number() OVER
   * (PARTITION BY key ORDER BY ...) <= k` — the reference's own
@@ -121,8 +121,7 @@ object TopKPerKey {
   }
 
   /** Strategy: partial fold → (exchange via EnsureRequirements) → final
-    * fold. Registered per-session through `experimental.extraStrategies`
-    * (idempotent).
+    * fold. Installed by `GraftExtensions` when the session is built.
     */
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -133,18 +132,12 @@ object TopKPerKey {
     }
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(Strategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ Strategy
-
   /** Public surface: top `k` rows per `keys` group, "top" = first under
     * `orderBy` (e.g. `col("v").desc, col("id").asc`). Column order
     * expressions must resolve against `df`.
     */
   def topKPerKey(df: DataFrame, keys: Seq[String], orderBy: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
     val analyzed = PlanBridge.analyzed(df)
     val keyAttrs: Seq[Expression] = keys.map { n =>
       analyzed.output.find(_.name == n).getOrElse(

@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.plans.TopKPerKey.TopKPerKeyNode
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EqualTo, Expression, IntegerLiteral, LessThan, LessThanOrEqual, RowNumber, WindowExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Optimizer rule (the third Catalyst extension face, after the
@@ -34,10 +34,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * unchanged from row_number itself: ties in the ordering make BOTH forms
   * nondeterministic; a unique tie-break column makes both exact.
   *
-  * Runs in the user-provided batch (after the built-in
-  * InsertWindowGroupLimit), so a WindowGroupLimit the optimizer already
-  * pushed below the Window is recognized and stripped — the k-heap
-  * subsumes it.
+  * Injected with `injectOptimizerRule`, so it runs in the operator-
+  * optimization batches, before the built-in "Infer window group limit"
+  * batch: the Window it matches has no WindowGroupLimit below it yet, and
+  * once rewritten there is no Window left for that batch to cap.
   */
 object TopKRewrite extends Rule[LogicalPlan] {
 
@@ -53,18 +53,11 @@ object TopKRewrite extends Rule[LogicalPlan] {
     if (!conf.getConfString("spark.graft.topk.rewrite", "false").toBoolean) plan
     else plan.transformUp {
       case Project(projectList,
-          Filter(cond, w @ Window(Seq(al @ Alias(we: WindowExpression, _)), part, order, wchild, _)))
+          Filter(cond, Window(Seq(al @ Alias(we: WindowExpression, _)), part, order, wchild, _)))
         if we.windowFunction.isInstanceOf[RowNumber] && order.nonEmpty &&
           limit(cond, al.toAttribute).exists(_ > 0) &&
           !projectList.exists(_.references.contains(al.toAttribute)) =>
         val k = limit(cond, al.toAttribute).get
-        // strip a WindowGroupLimit the built-in optimizer already inserted
-        // below this window — the per-key fold subsumes it
-        val child = wchild match {
-          case WindowGroupLimit(p2, o2, _, l2, inner)
-            if p2 == part && o2 == order && l2 >= k => inner
-          case other => other
-        }
-        Project(projectList, TopKPerKeyNode(part, order, k, child))
+        Project(projectList, TopKPerKeyNode(part, order, k, wchild))
     }
 }

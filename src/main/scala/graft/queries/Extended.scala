@@ -31,7 +31,7 @@ object ExtendedQueries {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  /** Codegen'd native dot product (requires GraftExtensions registration). */
+  /** Codegen'd native dot product (`float_dot`, a GraftExtensions function). */
   def nativeDot(a: Column, b: Column): Column = call_function("float_dot", a, b)
 
   /** Bit-deterministic 6-decimal rounding: floor(x·1e6 + 0.5)/1e6 is the
@@ -294,7 +294,6 @@ object ExtendedQueries {
     * the top-10 cut is identical in both engines.
     */
   def x11CosineTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val emb = Io.table(spark, sfDir, "embeddings")
     // The query-vector norm is a constant: compute it ONCE on the broadcast
     // side instead of re-deriving it for every scanned row (O(d) per row).
@@ -2011,7 +2010,7 @@ object ExtendedQueries {
     * plan shuffles and external-sorts EVERY event for the same output —
     * `TakeOrderedAndProject`'s map-side-heap argument (O2/x48), lifted from
     * global top-k to per-key, via LogicalPlan + SparkStrategy + SparkPlan
-    * registered through `experimental.extraStrategies`.
+    * (the strategy is installed with the session's GraftExtensions).
     *
     * The oracle runs the window formulation in DuckDB, so the hash match
     * pins the operator's retained SET against the declarative semantics
@@ -2049,12 +2048,13 @@ object ExtendedQueries {
     * Conf scoping: the rewrite flag is session-wide and would silently
     * change every OTHER declared query's row_number-top-k plans, so the
     * query builds on `spark.newSession()` — same SparkContext, isolated
-    * conf/extensions — leaving the driver's session untouched (the x109
-    * ADVICE class: declared queries stay order-independent).
+    * conf — leaving the driver's session untouched (the x109 ADVICE
+    * class: declared queries stay order-independent). `newSession` keeps
+    * the builder's `SparkSessionExtensions`, so the rule and the strategy
+    * are there without registering anything.
     */
   def x149TopkRewrite(spark: SparkSession, sfDir: String): DataFrame = {
     val s2 = spark.newSession()
-    graft.plans.GraftExtensions.register(s2)
     s2.conf.set("spark.graft.topk.rewrite", "true")
     s2.conf.set("spark.sql.shuffle.partitions",
       spark.conf.get("spark.sql.shuffle.partitions"))
@@ -2180,12 +2180,10 @@ object ExtendedQueries {
     * window idiom. [[graft.plans.GraftSqlParser]] rewrites the statement
     * into the standard `row_number`/`rn = 1` form and hands it to Spark's
     * own parser, so Catalyst sees a plain analyzed window plan and every
-    * optimization (pruning, pushdown, `TopKRewrite`) applies untouched;
-    * sessions built with `spark.sql.extensions=graft.plans.GraftExtensions`
-    * run the statement through `spark.sql` directly (spec-pinned
-    * end-to-end in `GraftSqlParserSpec`; the driver-owned session here
-    * goes through `GraftSqlParser.sql`, which produces the identical
-    * rewrite — there is no runtime `injectParser` escape hatch).
+    * optimization (pruning, pushdown, `TopKRewrite`) applies untouched.
+    * Every session is built with the parser (`Tuning.session`), so the
+    * statement runs through plain `spark.sql` (spec-pinned end-to-end in
+    * `GraftSqlParserSpec`).
     *
     * Oracle: the window idiom itself in DuckDB — a full hash match pins
     * the dialect's semantics (NULL texts group together; first = smallest
@@ -2197,8 +2195,7 @@ object ExtendedQueries {
     */
   def x153DedupSql(spark: SparkSession, sfDir: String): DataFrame = {
     Io.table(spark, sfDir, "documents").createOrReplaceTempView("x153_documents")
-    graft.plans.GraftSqlParser
-      .sql(spark, "DEDUP x153_documents BY md5(text) ORDER BY doc_id")
+    spark.sql("DEDUP x153_documents BY md5(text) ORDER BY doc_id")
       .select(col("doc_id"), col("source"),
         length(col("text")).cast("long").as("len"))
       .orderBy("doc_id")

@@ -217,7 +217,6 @@ object LlmQueries {
     * asserts x13b == x13 row-for-row.
     */
   def x13bMinhashNative(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val docs = Io.table(spark, sfDir, "documents")
     val sig = fanOut(docs)
       .select(col("doc_id"), call_function("minhash_all", col("text"), lit(16)).as("mh"))
@@ -395,7 +394,6 @@ object LlmQueries {
     // (functions/MinWindowMd5) computes the identical value with a
     // running min and zero array allocation (short texts hash whole,
     // matching the old CASE branch)
-    graft.plans.GraftExtensions.register(spark)
     Io.table(spark, sfDir, "documents")
       .select(col("doc_id"),
         call_function("min_window_md5", col("text"), lit(8)).as("fingerprint"))
@@ -785,7 +783,6 @@ object LlmQueries {
     * (embedding + norm + bucket) is broadcast.
     */
   def x21AnnBucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.nativeDot
     val bucket = (element_at(col("embedding"), 1) > 0).cast("int") * 8 +
       (element_at(col("embedding"), 2) > 0).cast("int") * 4 +
@@ -825,7 +822,6 @@ object LlmQueries {
     */
   private def cosineNeardupBits(spark: SparkSession, sfDir: String,
       bits: Int, keepAll: Boolean): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.{nativeDot, stableRound6}
     val bucket = (0 until bits).map { i =>
       (element_at(col("embedding"), i + 1) > 0).cast("int") * (1 << (bits - 1 - i))
@@ -885,7 +881,6 @@ object LlmQueries {
     * DECIMAL — order-independent.
     */
   def x86LeakageAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.{nativeDot, stableRound6}
     val bits = 6
     val bucket = (0 until bits).map { i =>
@@ -928,7 +923,6 @@ object LlmQueries {
     * probe choice, and final order are ulp-drift-proof across engines.
     */
   def x32IvfAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.{nativeDot, stableRound6}
     val emb = Io.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"),
@@ -1188,7 +1182,6 @@ object LlmQueries {
   /** Corpus frame shared by the brute-force (x56) and ANN kNN paths:
     * vectors with their labels and precomputed norms. */
   private def knnCorpus(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.nativeDot
     Io.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"),
@@ -1792,7 +1785,6 @@ object LlmQueries {
     //   - sets and sigW are pinned beside docs2 (each is consumed by two
     //     plan branches); all three ride the repin registry, released by
     //     the next pinning query (the x20/x34/x69 contract).
-    graft.plans.GraftExtensions.register(spark)
     val sets = shingleSetArray(docs2)
       .select(col("doc_id"), col("shset"), size(col("shset")).cast("long").as("n"))
       .filter(col("n") > 0)
@@ -2043,7 +2035,6 @@ object LlmQueries {
     * reference like a compiled regex), zero joins, final order by doc_id.
     */
   def x192MultiMatch(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val termsSql = X192Terms.map(t => s"'$t'").mkString(", ")
     Io.table(spark, sfDir, "documents")
       .filter(col("text").isNotNull)
@@ -2077,7 +2068,6 @@ object LlmQueries {
   def x199PrepV5(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import ExtendedQueries.stableRound6
-    graft.plans.GraftExtensions.register(spark)
     val budget = 1000000.0
     val termsSql = X192Terms.map(t => s"'$t'").mkString(", ")
     val screened = Io.table(spark, sfDir, "documents")
@@ -2207,7 +2197,6 @@ object LlmQueries {
     * combining agg), broadcast joins elsewhere.
     */
   def x49PqAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.{nativeDot, stableRound6}
     val emb = Io.table(spark, sfDir, "embeddings")
     def subs(v: Column): Column = array((0 until 8).map(s =>
@@ -2308,7 +2297,6 @@ object LlmQueries {
     * rows). Both aggs partial-combine in the scan stage.
     */
   def x52KmeansStep(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.{nativeDot, stableRound6}
     val emb = Io.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"),
@@ -2611,7 +2599,6 @@ object LlmQueries {
     * at any k; only the pair-expansion constant changes.
     */
   def semDedup(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.{nativeDot, stableRound6}
     val emb = Io.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"),
@@ -3453,7 +3440,6 @@ object LlmQueries {
     * the already-limited 5-row frame (constant, not corpus, cost).
     */
   def x105RecallAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.nativeDot
     val emb = Io.table(spark, sfDir, "embeddings")
     val q = emb.filter(col("vec_id") === 0)
@@ -3572,7 +3558,6 @@ object LlmQueries {
     */
   def x111RrfFusion(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftExtensions.register(spark)
     val nd = ExtendedQueries.nativeDot _
     val docs = fanOut(Io.table(spark, sfDir, "documents"))
     val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -4047,7 +4032,6 @@ object LlmQueries {
     * explosion exists only ahead of the codegen gate).
     */
   def x123BloomContamination(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val docs = fanOut(Io.table(spark, sfDir, "documents"))
     val g = gramHashes5(docs)
     // the bench distinct is BENCHMARK-sized (tiny at any corpus scale) but
@@ -4668,7 +4652,6 @@ object LlmQueries {
     * serialization boundary.
     */
   def x134UnicodeNorm(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     Io.table(spark, sfDir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"),
@@ -4708,7 +4691,6 @@ object LlmQueries {
     * scales as N/T for the same sharpness, still megabytes).
     */
   def x136CmsHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val T = 6
     val docs = fanOut(Io.table(spark, sfDir, "documents")
       .filter(col("text").isNotNull))
@@ -4745,7 +4727,6 @@ object LlmQueries {
     * single-partition where it is deterministic.
     */
   def x137SpaceSavingTerms(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val docs = fanOut(Io.table(spark, sfDir, "documents")
       .filter(col("text").isNotNull))
     docs.select(col("source"), explode(split(col("text"), " ")).as("tok"))
@@ -4980,7 +4961,6 @@ object LlmQueries {
     * x56b ANN relief path applies unchanged).
     */
   def x150HardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.{nativeDot, stableRound6}
     val emb = Io.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"),
@@ -5025,7 +5005,6 @@ object LlmQueries {
     * ranking window; exact integers throughout.
     */
   def x152CharTrigrams(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val docs = fanOut(Io.table(spark, sfDir, "documents")
       .filter(col("text").isNotNull))
     val grams = docs.select(col("lang"),
@@ -6046,7 +6025,6 @@ object LlmQueries {
     * TakeOrderedAndProject(5); the intersection joins are 5×5.
     */
   def x257MatryoshkaRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val nd = ExtendedQueries.nativeDot _
     val emb = Io.table(spark, sfDir, "embeddings")
     def top5(d: Int): DataFrame = {

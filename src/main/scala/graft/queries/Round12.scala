@@ -937,7 +937,6 @@ object Round12Queries {
     * vector-sized aggregates, an 8-row finale. Linear in vectors.
     */
   def x326Silhouette(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     import ExtendedQueries.{nativeDot, stableRound6}
     val emb = Io.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"),
@@ -1226,7 +1225,6 @@ object Round12Queries {
     */
   private def candJaccard(spark: SparkSession, sfDir: String): DataFrame =
     candJac(spark, sfDir) {
-    graft.plans.GraftExtensions.register(spark)
     val fanned = fanOut(Io.table(spark, sfDir, "documents"))
     // Build-scoped staging pins: the native signature has NO exchange, so
     // without a pin each of the plan's branches (bands, both pair sides)

@@ -300,7 +300,6 @@ object Round13Queries {
     */
   def x352Hopkins(spark: SparkSession, sfDir: String): DataFrame = {
     import ExtendedQueries.stableRound6
-    graft.plans.GraftExtensions.register(spark)
     val emb = Io.table(spark, sfDir, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
@@ -426,7 +425,6 @@ object Round13Queries {
     // -> rotate order, one locked implementation for every rotating pin
     x354Pin.swapStaged {
     import ExtendedQueries.stableRound6
-    graft.plans.GraftExtensions.register(spark)
     val k = 3
     val emb = Io.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),

@@ -60,6 +60,20 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(sets.forall(fileName(_) == "Io.scala"), sets)
   }
 
+  // The needles below are split so that a text search of the whole source
+  // tree finds no copy of them in this file either.
+
+  test("engine extensions are installed only at session build, never at runtime") {
+    val runtime = hits("experimental" + ".extra") ++ hits("GraftExtensions" + ".register")
+    assert(runtime.isEmpty, runtime)
+  }
+
+  test("sessions are built only in Tuning") {
+    val builds = hits("SparkSession" + ".builder")
+    assert(builds.nonEmpty, "Tuning.session builds the one session")
+    assert(builds.forall(fileName(_) == "Tuning.scala"), builds)
+  }
+
   test("catching Throwable is left only to Bench") {
     val catches = hits("case _: Throwable")
     assert(catches.forall(fileName(_) == "Bench.scala"), catches)

@@ -7,16 +7,12 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM — Spark session
-  * startup costs seconds; per-suite sessions would dominate test time.
+  * startup costs seconds; per-suite sessions would dominate test time. It
+  * is the mains' own session (`Tuning.session`), extensions included.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.Tuning.session("4")
     s.sparkContext.setLogLevel("WARN")
     s
   }

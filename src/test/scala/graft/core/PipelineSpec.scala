@@ -331,15 +331,20 @@ class PipelineSpec extends SparkSpec {
     assert(jobsDuring(Pipeline.clean(raw, None)) == 0)
   }
 
-  /** A CSV of `timestamps` under `tsHeader`, each row otherwise valid. */
-  private def hostileCsv(prefix: String, tsHeader: String, timestamps: Seq[String]): String = {
+  /** A CSV of `header` and `rows`, encoded in `charset`. */
+  private def csvOf(prefix: String, header: String, rows: Seq[String],
+      charset: java.nio.charset.Charset = java.nio.charset.StandardCharsets.UTF_8): String = {
     val f = tmpDir(prefix).resolve("hostile.csv")
-    val header =
-      s"$tsHeader,transaction_type,amount,receiving_address,location_region,risk_score"
-    val rows = timestamps.zipWithIndex.map { case (ts, i) => s"$ts,sale,$i.5,a$i,eu,0.1" }
-    Files.writeString(f, (header +: rows).mkString("", "\n", "\n"))
+    Files.write(f, (header +: rows).mkString("", "\n", "\n").getBytes(charset))
     f.toString
   }
+
+  /** A CSV of `timestamps` under `tsHeader`, each row otherwise valid. */
+  private def hostileCsv(prefix: String, tsHeader: String, timestamps: Seq[String]): String =
+    csvOf(prefix, s"$tsHeader,transaction_type,amount,receiving_address,location_region,risk_score",
+      timestamps.zipWithIndex.map { case (ts, i) => s"$ts,sale,$i.5,a$i,eu,0.1" })
+
+  private val fraudHeader = "timestamp,transaction_type,amount,receiving_address,location_region,risk_score"
 
   private def cli(in: String, minPre: Double = 0.98): Int =
     PipelineMain.runCli(spark, in, tmp("d_hostile"), tmp("c_hostile"), minPre, 0.995)
@@ -384,5 +389,65 @@ class PipelineSpec extends SparkSpec {
       .csv(in).schema("timestamp").dataType == org.apache.spark.sql.types.DateType)
     assert(PipelineMain.runCli(spark, in, data, tmp("c_date_ts"), 0.98, 0.995) == 0)
     assert(spark.read.parquet(s"$data/stg_transactions").count() == 9)
+  }
+
+  test("hostile: mistyped amounts coerce to null and drop, exit 0") {
+    // "1,5" and "12abc" are not numbers: to_numeric(errors="coerce") makes
+    // them null (SURVEY P3), so they fail amount_not_null. 2 fails in 200
+    // rows is conformity 0.99 >= 0.98, clean drops both rows and both gates
+    // pass: exit 0 (SURVEY C2)
+    val rows = (0 until 200).map { i =>
+      val amount = i match { case 7 => "\"1,5\"" case 8 => "12abc" case _ => s"$i.5" }
+      s"${1700000000L + i},sale,$amount,a$i,eu,0.1"
+    }
+    val data = tmp("d_bad_amount")
+    assert(PipelineMain.runCli(spark, csvOf("pipe_bad_amount", fraudHeader, rows),
+      data, tmp("c_bad_amount"), 0.98, 0.995) == 0)
+    assert(spark.read.parquet(s"$data/stg_transactions").count() == 198)
+  }
+
+  test("hostile: a text risk_score column coerces to null, exit 0") {
+    // every risk_score coerces to null (SURVEY P3); no DQ rule reads it, so
+    // both gates pass: exit 0 (SURVEY C2), and the region mean over all-null
+    // scores is null (SURVEY A1)
+    val rows = (0 until 20).map(i => s"${1700000000L + i},sale,$i.5,a$i,eu,high")
+    val (data, curated) = (tmp("d_text_risk"), tmp("c_text_risk"))
+    assert(PipelineMain.runCli(spark, csvOf("pipe_text_risk", fraudHeader, rows),
+      data, curated, 0.98, 0.995) == 0)
+    val staged = spark.read.parquet(s"$data/stg_transactions")
+    assert(staged.count() == 20 && staged.filter(col("risk_score").isNotNull).count() == 0)
+    val avgs = spark.read.parquet(s"$data/region_risk_avg").collect()
+    assert(avgs.length == 1 && avgs.head.isNullAt(avgs.head.fieldIndex("avg_risk_score")))
+  }
+
+  test("hostile: two amount headers that normalize to one name") {
+    // "Amount" and " amount" both become `amount` (SURVEY P1,
+    // pipeline.py:118). The pre profile runs on the raw names and passes;
+    // clean's ambiguous reference then escapes runCli (no exit code maps
+    // it), and with a breaching gate the gate wins: exit 2 (SURVEY C2)
+    val rows = (0 until 20).map(i => s"${1700000000L + i},sale,$i.5,$i.5,a$i,eu,0.1")
+    val in = csvOf("pipe_dup_amount",
+      "timestamp,transaction_type,Amount, amount,receiving_address,location_region,risk_score", rows)
+    val e = intercept[AnalysisException](cli(in))
+    assert(e.getCondition == "AMBIGUOUS_REFERENCE", e.getMessage)
+    assert(cli(in, minPre = 1.01) == 2)
+  }
+
+  test("hostile: a Latin-1 location_region decodes with replacement characters, exit 0") {
+    // Ingest reads the CSV as UTF-8 (SURVEY §1 Ingest, pipeline.py:41-47).
+    // Spark's reader decodes the malformed Latin-1 byte as U+FFFD, no
+    // rule reads the region, and both gates pass: exit 0 (SURVEY C2).
+    // pandas' default strict decoding would raise here instead; this pins
+    // the engine's own outcome.
+    val rows = (0 until 20).map { i =>
+      s"${1700000000L + i},sale,$i.5,a$i,${if (i % 2 == 0) "S\u00e3o Paulo" else "eu"},0.1"
+    }
+    val data = tmp("d_latin1")
+    assert(PipelineMain.runCli(spark,
+      csvOf("pipe_latin1", fraudHeader, rows, java.nio.charset.StandardCharsets.ISO_8859_1),
+      data, tmp("c_latin1"), 0.98, 0.995) == 0)
+    val regions = spark.read.parquet(s"$data/stg_transactions")
+      .select("location_region").distinct().collect().map(_.getString(0)).toSet
+    assert(regions == Set("S\ufffdo Paulo", "eu"), regions)
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** The char_ngrams generator: positional windows in order, short/null
@@ -12,7 +11,6 @@ class CharNgramsSpec extends SparkSpec {
   import spark.implicits._
 
   test("every positional window in order; short and null inputs generate nothing") {
-    GraftExtensions.register(spark)
     val df = Seq(Some("abcde"), Some("ab"), Some("abc"), None).toDF("s")
     val out = df.select(col("s"), expr("char_ngrams(s, 3)").as("g"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -22,7 +20,6 @@ class CharNgramsSpec extends SparkSpec {
   }
 
   test("n = 1 yields every character; multi-byte codepoints window correctly") {
-    GraftExtensions.register(spark)
     val out = Seq("aéb").toDF("s") // a é b — é is 2 UTF-8 bytes
       .select(expr("char_ngrams(s, 2)"))
       .collect().map(_.getString(0)).toSeq
@@ -33,7 +30,6 @@ class CharNgramsSpec extends SparkSpec {
   }
 
   test("invalid n fails at analysis; the expansion plans as Generate") {
-    GraftExtensions.register(spark)
     val err = intercept[Exception] {
       Seq("abc").toDF("s").select(expr("char_ngrams(s, 0)")).collect()
     }

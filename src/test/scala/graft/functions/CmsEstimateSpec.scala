@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** cms_estimate must agree with the count_min_sketch aggregate's hashing
@@ -12,7 +11,6 @@ class CmsEstimateSpec extends SparkSpec {
   import spark.implicits._
 
   private def sketchOf(items: Seq[String]) = {
-    GraftExtensions.register(spark)
     items.toDF("s")
       .agg(expr("count_min_sketch(s, cast(0.0001 as double), cast(0.99 as double), 42)"))
       .head().getAs[Array[Byte]](0)
@@ -40,7 +38,6 @@ class CmsEstimateSpec extends SparkSpec {
   }
 
   test("null item gives null; both execution paths agree") {
-    GraftExtensions.register(spark)
     val sk = sketchOf(Seq("x", "x", "y"))
     val df = Seq(Some("x"), Some("y"), Some("z"), None).toDF("s")
     var byMode = Map.empty[String, Seq[Any]]

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftExtensions
 import graft.queries.ExtendedQueries
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -19,7 +18,6 @@ class FloatDotSpec extends SparkSpec {
     Seq.fill(n)((Seq.fill(dim)(rnd.nextFloat() * 2 - 1), Seq.fill(dim)(rnd.nextFloat() * 2 - 1)))
 
   test("float_dot equals the zip_with/aggregate formulation bit-for-bit") {
-    GraftExtensions.register(spark)
     val df = randVecs(200, 64).toDF("a", "b")
     val cmp = df.select(
       ExtendedQueries.dot(col("a"), col("b")).as("ho"),
@@ -29,7 +27,6 @@ class FloatDotSpec extends SparkSpec {
   }
 
   test("float_dot: null array or null element poisons to null; empty arrays give 0") {
-    GraftExtensions.register(spark)
     val df = Seq(
       (Some(Seq(1f, 2f)), Some(Seq(3f, 4f))),        // 11.0
       (None, Some(Seq(1f, 2f))),                     // null array
@@ -45,7 +42,6 @@ class FloatDotSpec extends SparkSpec {
   }
 
   test("float_dot works in both codegen and interpreted evaluation") {
-    GraftExtensions.register(spark)
     val df = randVecs(50, 16).toDF("a", "b")
     val expected = df.select(ExtendedQueries.dot(col("a"), col("b"))).collect().toSeq
     for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {

@@ -17,7 +17,6 @@ class MicroL2Spec extends SparkSpec {
     call_function("micro_l2", expr(a), expr(b))
 
   test("micro_l2 exact value on plain lanes") {
-    graft.plans.GraftExtensions.register(spark)
     // Σ ⌊(x−y)²·10⁶+0.5⌋ over (1.5−0.5)²=1, (2−(−1))²=9 → 1e6 + 9e6
     val v = spark.range(1)
       .select(microL2("array(1.5d, 2.0d)", "array(0.5d, -1.0d)"))
@@ -26,7 +25,6 @@ class MicroL2Spec extends SparkSpec {
   }
 
   test("micro_l2 poisons null lane, null array, and length mismatch") {
-    graft.plans.GraftExtensions.register(spark)
     val df = spark.range(1).select(
       microL2("array(1.0d, cast(null as double))", "array(1.0d, 2.0d)").as("a"),
       microL2("array(1.0d, 2.0d)", "cast(null as array<double>)").as("b"),

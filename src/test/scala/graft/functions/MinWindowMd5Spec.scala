@@ -16,7 +16,6 @@ class MinWindowMd5Spec extends SparkSpec {
       |       i -> md5(substring(text, i, 8)))) END""".stripMargin)
 
   test("equals the HOF reference form on sf0.001 documents") {
-    graft.plans.GraftExtensions.register(spark)
     val docs = graft.core.Io.table(spark, "/root/testdata/sf0.001", "documents")
       .filter(col("text").isNotNull)
     val diff = docs.select(
@@ -27,7 +26,6 @@ class MinWindowMd5Spec extends SparkSpec {
   }
 
   test("edges: short, exact-width, multi-byte codepoints, null") {
-    graft.plans.GraftExtensions.register(spark)
     val df = Seq(
       Some("abc"),                 // shorter than width → md5(whole)
       Some("exactly8"),            // one window

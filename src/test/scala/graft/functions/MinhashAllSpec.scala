@@ -10,10 +10,7 @@ import org.apache.spark.sql.functions._
 class MinhashAllSpec extends SparkSpec {
   import spark.implicits._
 
-  private def registered() = { graft.plans.GraftExtensions.register(spark); spark }
-
   test("minhash_all matches the exploded md5-min formulation exactly") {
-    registered()
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox"),
@@ -47,7 +44,6 @@ class MinhashAllSpec extends SparkSpec {
   }
 
   test("x13b (native signature) equals x13 (exploded signature) row-for-row") {
-    registered()
     val sf = "/root/testdata/sf0.001"
     val a = LlmQueries.x13MinhashNearDedup(spark, sf).collect().toSeq
     val b = LlmQueries.x13bMinhashNative(spark, sf).collect().toSeq
@@ -55,7 +51,6 @@ class MinhashAllSpec extends SparkSpec {
   }
 
   test("type checking rejects non-string input and non-literal k") {
-    registered()
     val df = Seq((1, 2)).toDF("a", "b")
     val e = intercept[Exception] {
       df.select(call_function("minhash_all", col("a"), lit(16))).collect()

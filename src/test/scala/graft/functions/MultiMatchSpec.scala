@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.AnalysisException
 import scala.util.Random
@@ -16,7 +15,6 @@ class MultiMatchSpec extends SparkSpec {
   import spark.implicits._
 
   private def mm(text: String, pats: Seq[String]): (Int, Int, String) = {
-    GraftExtensions.register(spark)
     val p = pats.map(t => s"'$t'").mkString(", ")
     val r = Seq(text).toDF("t")
       .selectExpr(s"multi_match(t, array($p)) AS m")
@@ -46,7 +44,6 @@ class MultiMatchSpec extends SparkSpec {
   }
 
   test("null text yields a null struct; non-ASCII text bytes reset, ASCII matches survive") {
-    GraftExtensions.register(spark)
     val out = Seq[Option[String]](None, Some("héllo key café key"))
       .toDF("t").selectExpr("multi_match(t, array('key', 'llo')) AS m")
       .select("m").collect()
@@ -57,7 +54,6 @@ class MultiMatchSpec extends SparkSpec {
   }
 
   test("pattern-literal validation fails at analysis time") {
-    GraftExtensions.register(spark)
     def bad(expr: String): String =
       intercept[AnalysisException] {
         Seq("x").toDF("t").selectExpr(s"multi_match(t, $expr)").collect()
@@ -81,7 +77,6 @@ class MultiMatchSpec extends SparkSpec {
   }
 
   test("automaton equals per-pattern strpos on random word-bag text (codegen and interpreted)") {
-    GraftExtensions.register(spark)
     val vocab = Seq("key", "agg", "row", "scan", "slow", "fast", "table", "a", "the")
     val pats = Seq("fast", "fast table", "a a", "the key", "scan slow", "row")
     val rnd = new Random(42)

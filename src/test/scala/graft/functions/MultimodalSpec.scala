@@ -38,7 +38,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("readMediaDir ingests raw files via the binaryFile source") {
-    val dir = java.nio.file.Files.createTempDirectory("media").toString
+    val dir = tmpDir("media").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.png"), Array[Byte](1, 2, 3))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/b.jpg"), Array[Byte](4, 5))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/c.txt"), Array[Byte](6))
@@ -123,7 +123,7 @@ class MultimodalSpec extends SparkSpec {
     // 2x2: red green / blue white — one pure color per quadrant
     val a = png(Seq(Seq(0xff0000, 0x00ff00), Seq(0x0000ff, 0xffffff)))
     val b = png(Seq(Seq(0xffffff, 0xffffff), Seq(0xffffff, 0xffffff)))
-    val dir = java.nio.file.Files.createTempDirectory("realpng").toString
+    val dir = tmpDir("realpng").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.png"), a)
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/b.png"), b)
 

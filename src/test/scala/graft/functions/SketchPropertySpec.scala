@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -16,7 +15,6 @@ class SketchPropertySpec extends SparkSpec {
   private val rnd = new Random(1234)
 
   test("cms_estimate: estimate >= true count for every item, over random streams") {
-    GraftExtensions.register(spark)
     for (_ <- 1 to 3) {
       val items = Seq.fill(500)(s"it${rnd.nextInt(60)}")
       val truth = items.groupBy(identity).view.mapValues(_.size.toLong).toMap
@@ -33,7 +31,6 @@ class SketchPropertySpec extends SparkSpec {
   }
 
   test("space_saving: capacity, bounds, and >n/m retention over random skewed streams") {
-    GraftExtensions.register(spark)
     for (_ <- 1 to 3) {
       // zipf-ish: item i has weight ~ 1/(i+1)
       val items = Seq.fill(600)(s"z${math.min(49, (1 / (rnd.nextDouble() + 0.02)).toInt)}")
@@ -56,7 +53,6 @@ class SketchPropertySpec extends SparkSpec {
   }
 
   test("char_ngrams equals Scala's sliding windows on random strings") {
-    GraftExtensions.register(spark)
     val strs = Seq.fill(30)(Random.alphanumeric.take(rnd.nextInt(12)).mkString)
     for (n <- Seq(1, 2, 4)) {
       val expect = strs.flatMap(s => if (s.length >= n) s.sliding(n).toSeq else Nil)

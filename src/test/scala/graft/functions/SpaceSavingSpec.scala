@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,6 @@ class SpaceSavingSpec extends SparkSpec {
   import spark.implicits._
 
   private def summarize(items: Seq[String], m: Int, partitions: Int): Seq[(String, Long, Long)] = {
-    GraftExtensions.register(spark)
     items.toDF("s").repartition(partitions)
       .agg(expr(s"space_saving(s, $m)"))
       .head().getSeq[Row](0).map(r => (r.getString(0), r.getLong(1), r.getLong(2)))

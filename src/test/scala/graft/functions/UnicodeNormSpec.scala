@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** The native nfc_normalize / strip_accents expressions must match the JDK
@@ -17,7 +16,6 @@ class UnicodeNormSpec extends SparkSpec {
   private val composedA = "\u00e1"    // á precomposed (NFC)
 
   test("nfc_normalize composes; strip_accents folds; null preserved") {
-    GraftExtensions.register(spark)
     val df = Seq(
       Some(s"c${decomposedA}fe"), // cafe with decomposed a-acute
       Some(composedA),            // already NFC: unchanged
@@ -35,7 +33,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("both paths (codegen and interpreted) match the JDK reference") {
-    GraftExtensions.register(spark)
     val strs = Seq(
       s"$decomposedA o\u0308 x",       // NFD a-acute + NFD o-diaeresis
       s"$composedA\u00f6",              // already-composed pair

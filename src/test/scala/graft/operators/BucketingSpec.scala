@@ -45,7 +45,7 @@ class BucketingSpec extends SparkSpec {
 
   test("partitioned layout prunes the scan to the filtered lang directories") {
     val docs = graft.core.Io.table(spark, sf, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("part_docs").toString
+    val dir = tmpDir("part_docs").toString
     Bucketing.writePartitioned(docs, dir, "lang")
     val en = spark.read.parquet(dir).filter(col("lang") === "en")
     val p = en.queryExecution.executedPlan.toString

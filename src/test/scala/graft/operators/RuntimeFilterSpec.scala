@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The two runtime-filtering behaviors Catalyst contributes to the 100 TB
   * story: injected bloom filters (big-side rows rejected before the join
@@ -24,7 +23,7 @@ class RuntimeFilterSpec extends SparkSpec {
     // broadcast-size dim disqualifies, so force the shuffle path
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val dir = Files.createTempDirectory("bloom").toString
+      val dir = tmpDir("bloom").toString
       spark.range(50000).select(col("id").as("fk"), (col("id") * 2).as("v"))
         .write.mode("overwrite").parquet(s"$dir/fact")
       spark.range(1000).select(col("id").as("k"), (col("id") % 7).as("tag"))
@@ -48,7 +47,7 @@ class RuntimeFilterSpec extends SparkSpec {
   }
 
   test("dim filter prunes fact partitions dynamically (DPP)") {
-    val dir = Files.createTempDirectory("dpp").toString
+    val dir = tmpDir("dpp").toString
     (0 until 1000).map(i => (i.toLong, (i % 5).toLong))
       .toDF("v", "part").write.partitionBy("part")
       .mode("overwrite").parquet(s"$dir/fact")

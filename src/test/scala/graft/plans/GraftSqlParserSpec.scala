@@ -1,15 +1,15 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.functions._
 
 /** The parser extension face: the DEDUP dialect statement end-to-end
-  * through a session built with `spark.sql.extensions` (the real
-  * `injectParser` path), the runtime-rewrite fallback
-  * (`GraftSqlParser.sql`), delegate passthrough for standard SQL, and the
-  * grammar's error edges.
+  * through the shared session, whose parser came from `injectParser`
+  * (`Tuning.session` builds it with `GraftExtensions`), SQL parameters
+  * passing through the parser, delegate passthrough for standard SQL, and
+  * the grammar's error edges.
   */
 class GraftSqlParserSpec extends SparkSpec {
   import spark.implicits._
@@ -24,103 +24,73 @@ class GraftSqlParserSpec extends SparkSpec {
 
   private def fixture: DataFrame = rows.toDF("doc_id", "source", "text").repartition(3)
 
-  /** Same fixture, owned by `s` (temp views live per-session). */
-  private def fixtureOn(s: SparkSession): DataFrame = {
-    import s.implicits._
-    rows.toDF("doc_id", "source", "text").repartition(3)
-  }
+  private def rowSet(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
 
   /** The hand-written window idiom the statement must equal. */
   private def expected(df: DataFrame): Set[Seq[Any]] = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn").collect().map(_.toSeq).toSet
-  }
-
-  /** A session whose parser really came from `injectParser`: the shared
-    * test session predates it, so default/active are cleared and a fresh
-    * session (same SparkContext) is built through
-    * `builder().withExtensions` — the programmatic arm of the
-    * SparkSessionExtensions mechanism (the `spark.sql.extensions` conf
-    * arm is a STATIC conf, inert once a SparkContext exists, which is
-    * exactly why the declared query needs `GraftSqlParser.sql`). The
-    * shared session is restored after — suites run sequentially in the
-    * forked test JVM, so the swap is invisible to other specs.
-    */
-  private def withInjectedSession[T](f: SparkSession => T): T = {
-    val shared = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .withExtensions(e => new GraftExtensions().apply(e))
-        .getOrCreate()
-      assert(s ne shared, "swap must yield a fresh session")
-      f(s)
-    } finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
+    rowSet(df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn"))
   }
 
   test("injected session parses and runs the DEDUP statement via plain spark.sql") {
-    withInjectedSession { s =>
-      assert(s.sessionState.sqlParser.isInstanceOf[GraftSqlParser])
-      val df = fixtureOn(s)
-      df.createOrReplaceTempView("gsp_docs")
-      val got = s.sql("DEDUP gsp_docs BY md5(text) ORDER BY doc_id")
-        .collect().map(_.toSeq).toSet
-      assert(got == expected(df))
-      assert(got.exists(_.head == 4L) && !got.exists(_.head == 5L),
-        "NULL texts must group together, keeping the smallest doc_id")
-    }
+    assert(spark.sessionState.sqlParser.isInstanceOf[GraftSqlParser])
+    val df = fixture
+    df.createOrReplaceTempView("gsp_docs")
+    val got = rowSet(spark.sql("DEDUP gsp_docs BY md5(text) ORDER BY doc_id"))
+    assert(got == expected(df))
+    assert(got.exists(_.head == 4L) && !got.exists(_.head == 5L),
+      "NULL texts must group together, keeping the smallest doc_id")
   }
 
   test("injected session still parses standard SQL through the delegate") {
-    withInjectedSession { s =>
-      fixtureOn(s).createOrReplaceTempView("gsp_docs")
-      assert(s.sql("SELECT count(*) AS n FROM gsp_docs").head().getLong(0) == 6L)
-      // and the other delegated faces still answer
-      assert(s.sessionState.sqlParser.parseMultipartIdentifier("a.b") == Seq("a", "b"))
-      assert(s.sessionState.sqlParser.parseDataType("int").typeName == "integer")
-    }
+    fixture.createOrReplaceTempView("gsp_docs")
+    assert(spark.sql("SELECT count(*) AS n FROM gsp_docs").head().getLong(0) == 6L)
+    // and the other delegated faces still answer
+    assert(spark.sessionState.sqlParser.parseMultipartIdentifier("a.b") == Seq("a", "b"))
+    assert(spark.sessionState.sqlParser.parseDataType("int").typeName == "integer")
   }
 
-  test("GraftSqlParser.sql rewrites on a session without the extension") {
-    assert(!spark.sessionState.sqlParser.isInstanceOf[GraftSqlParser])
-    val df = fixture
-    df.createOrReplaceTempView("gsp_docs")
-    val got = GraftSqlParser.sql(spark, "DEDUP gsp_docs BY md5(text) ORDER BY doc_id")
-      .collect().map(_.toSeq).toSet
-    assert(got == expected(df))
+  test("named parameters bind through the injected parser") {
+    fixture.createOrReplaceTempView("gsp_docs")
+    val literal = rowSet(spark.sql(
+      "SELECT doc_id, source FROM gsp_docs WHERE doc_id >= 3 AND source <> 'c'"))
+    val bound = rowSet(spark.sql(
+      "SELECT doc_id, source FROM gsp_docs WHERE doc_id >= :lo AND source <> :src",
+      Map("lo" -> 3L, "src" -> "c")))
+    assert(literal.size == 3 && bound == literal)
+  }
+
+  test("EXECUTE IMMEDIATE ... USING binds through the injected parser") {
+    fixture.createOrReplaceTempView("gsp_docs")
+    val literal = rowSet(spark.sql(
+      "SELECT source, count(*) AS n FROM gsp_docs WHERE doc_id <= 4 GROUP BY source"))
+    val bound = rowSet(spark.sql(
+      """EXECUTE IMMEDIATE
+        |'SELECT source, count(*) AS n FROM gsp_docs WHERE doc_id <= ? GROUP BY source'
+        |USING 4""".stripMargin))
+    assert(literal.size == 3 && bound == literal)
   }
 
   test("multi-key, DESC order, and trailing semicolon") {
     val df = fixture
     df.createOrReplaceTempView("gsp_docs")
     // keep the LARGEST doc_id per (source, text) group
-    val got = GraftSqlParser
-      .sql(spark, "DEDUP gsp_docs BY source, md5(text) ORDER BY doc_id DESC;")
-      .collect().map(_.toSeq).toSet
+    val got = rowSet(spark.sql("DEDUP gsp_docs BY source, md5(text) ORDER BY doc_id DESC;"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"), md5(col("text"))).orderBy(col("doc_id").desc)
-    val exp = df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn").collect().map(_.toSeq).toSet
+    val exp = rowSet(df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .drop("rn"))
     assert(got == exp)
   }
 
   test("backtick-quoted and multipart table identifiers survive the rewrite") {
     val df = fixture
     df.createOrReplaceTempView("gsp_docs")
-    val quoted = GraftSqlParser
-      .sql(spark, "DEDUP `gsp_docs` BY md5(text) ORDER BY doc_id")
-      .collect().map(_.toSeq).toSet
+    val quoted = rowSet(spark.sql("DEDUP `gsp_docs` BY md5(text) ORDER BY doc_id"))
     assert(quoted == expected(df))
     df.createOrReplaceGlobalTempView("gsp_global")
-    val multipart = GraftSqlParser
-      .sql(spark, "DEDUP global_temp.gsp_global BY md5(text) ORDER BY doc_id")
-      .collect().map(_.toSeq).toSet
+    val multipart = rowSet(spark.sql("DEDUP global_temp.gsp_global BY md5(text) ORDER BY doc_id"))
     assert(multipart == expected(df))
   }
 
@@ -134,7 +104,7 @@ class GraftSqlParserSpec extends SparkSpec {
   test("malformed key expressions fail in the delegated parse of the rewrite") {
     fixture.createOrReplaceTempView("gsp_docs")
     intercept[ParseException] {
-      GraftSqlParser.sql(spark, "DEDUP gsp_docs BY ,, ORDER BY doc_id").collect()
+      spark.sql("DEDUP gsp_docs BY ,, ORDER BY doc_id").collect()
     }
   }
 
@@ -150,15 +120,14 @@ class GraftSqlParserSpec extends SparkSpec {
   test("the rewrite composes with the TopKRewrite optimizer face") {
     val df = fixture
     df.createOrReplaceTempView("gsp_docs")
-    GraftExtensions.register(spark)
     val prior = spark.conf.getOption("spark.graft.topk.rewrite")
     spark.conf.set("spark.graft.topk.rewrite", "true")
     try {
-      val q = GraftSqlParser.sql(spark, "DEDUP gsp_docs BY md5(text) ORDER BY doc_id")
+      val q = spark.sql("DEDUP gsp_docs BY md5(text) ORDER BY doc_id")
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerKey"),
         s"the rn=1 rewrite output is exactly TopKRewrite's shape:\n$plan")
-      assert(q.collect().map(_.toSeq).toSet == expected(df))
+      assert(rowSet(q) == expected(df))
     } finally prior match {
       case Some(v) => spark.conf.set("spark.graft.topk.rewrite", v)
       case None    => spark.conf.unset("spark.graft.topk.rewrite")

@@ -24,7 +24,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   private def withFlag[T](on: Boolean)(f: => T): T = {
-    GraftExtensions.register(spark)
     val key = "spark.graft.topk.rewrite"
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, on.toString)
@@ -42,7 +41,8 @@ class TopKRewriteSpec extends SparkSpec {
     }
     assert(planOn.contains("TopKPerKeyFinal") && planOn.contains("TopKPerKeyPartial"),
       s"rewrite must fire on the canonical shape:\n$planOn")
-    assert(!planOn.contains("Window "), "the Window node must be gone")
+    assert(!planOn.contains("Window ") && !planOn.contains("WindowGroupLimit"),
+      "the Window node must be gone, with no WindowGroupLimit left behind")
     val rowsOff = withFlag(on = false)(windowTopK(df, 3).collect().map(_.toSeq).toSet)
     assert(rowsOn == rowsOff)
   }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** x22 as-of semantics on crafted fixtures: <= boundary inclusion,
@@ -12,7 +11,7 @@ class AsofSpec extends SparkSpec {
   import spark.implicits._
 
   test("as-of join boundary and tie semantics") {
-    val dir = Files.createTempDirectory("asof").toString
+    val dir = tmpDir("asof").toString
     def nanos(s: String): Long = Timestamp.valueOf(s).getTime * 1000000L
 
     Seq(

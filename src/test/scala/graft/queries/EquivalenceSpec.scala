@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import scala.util.Random
 
 /** Seeded-random equivalence properties: the scale-shaped formulations
@@ -18,7 +17,7 @@ class EquivalenceSpec extends SparkSpec {
 
   test("x29 banding == naive inequality join on random order histories") {
     for (_ <- 1 to 3) {
-      val dir = Files.createTempDirectory("eqv29").toString
+      val dir = tmpDir("eqv29").toString
       val n = 150 + rnd.nextInt(100)
       // timestamps cluster inside ±45 days so pairs regularly straddle the
       // 30-day band boundary
@@ -49,7 +48,7 @@ class EquivalenceSpec extends SparkSpec {
 
   test("x28 bucketed NN == brute-force argmax within each bucket on random embeddings") {
     for (_ <- 1 to 2) {
-      val dir = Files.createTempDirectory("eqv28").toString
+      val dir = tmpDir("eqv28").toString
       val n = 60 + rnd.nextInt(40)
       val rows = (0 until n).map { i =>
         (i.toLong, "l", Array.fill(8)(rnd.nextFloat() * 2f - 1f))

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Edge cases of the LLM-pipeline query group that the sf fixtures never
   * exercise: sub-shingle-length docs, exact duplicate texts, bucket pruning.
@@ -13,7 +12,7 @@ class LlmSpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = Files.createTempDirectory("llm_docs").toString
+    val dir = tmpDir("llm_docs").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -75,7 +74,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("x21: only vectors in the query's sign-bit bucket are scanned") {
-    val dir = Files.createTempDirectory("llm_emb").toString
+    val dir = tmpDir("llm_emb").toString
     def vec(lead: Seq[Float]): Seq[Float] = lead ++ Seq.fill(64 - lead.length)(0.5f)
     Seq(
       (0L, vec(Seq(1f, 1f, -1f, 1f)), 0),   // query: bucket 1101 = 13
@@ -173,7 +172,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("x49: an exact copy of the query gets the query's own PQ codes and ties at rank 1-2") {
-    val dir = Files.createTempDirectory("llm_pq").toString
+    val dir = tmpDir("llm_pq").toString
     val rnd = new scala.util.Random(7)
     def v(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() * 2 - 1)
     val q = v()
@@ -248,7 +247,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("x59: dups collapse within clusters only; sub-τ mates and singleton clusters stay kept") {
-    val dir = Files.createTempDirectory("llm_semdedup").toString
+    val dir = tmpDir("llm_semdedup").toString
     def axis(i: Int, v: Float): Seq[Float] =
       Seq.tabulate(64)(p => if (p == i - 1) v else 0f)
     def plus(a: Seq[Float], b: Seq[Float]): Seq[Float] = a.zip(b).map { case (x, y) => x + y }
@@ -313,7 +312,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("x56: majority label of the top-5 wins; self is excluded; vote count is exact") {
-    val dir = Files.createTempDirectory("llm_knn").toString
+    val dir = tmpDir("llm_knn").toString
     def e1(eps: Float): Seq[Float] =
       Seq(1f, eps, 0f) ++ Seq.fill(61)(0f)
     val mid: Seq[Float] = Seq(0.7f, 0.72f, 0f) ++ Seq.fill(61)(0f)
@@ -333,7 +332,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("kNN vote behind IVF candidates == brute-force x56 when probes cover the true top-5") {
-    val dir = Files.createTempDirectory("llm_knn_ann").toString
+    val dir = tmpDir("llm_knn_ann").toString
     // 3 orthogonal clusters (dims 0..2), per-id perturbation at dims 8..14
     // so same-cluster cosines are distinct unless ids collide mod 7 (then
     // the vec_id tie-break is exercised identically on both paths).

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Edge semantics of x28-x31 that the sf fixtures never pin down: bucket
@@ -13,7 +12,7 @@ class NewOpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("x28: in-bucket nearest neighbor; singleton buckets drop out") {
-    val dir = Files.createTempDirectory("x28").toString
+    val dir = tmpDir("x28").toString
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     Seq(
       (0L, "a", v(1, 1, 1, 1, 1, 1)),
@@ -30,7 +29,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x29: 30-day boundary inclusive, zero gap excluded, pairs cross bands") {
-    val dir = Files.createTempDirectory("x29").toString
+    val dir = tmpDir("x29").toString
     def ts(s: String) = Timestamp.valueOf(s + " 00:00:00")
     Seq(
       (1L, 1L, ts("2024-01-01")),
@@ -50,7 +49,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x32: probes top-2 centroid lists only — a vector in an unprobed list is invisible") {
-    val dir = Files.createTempDirectory("x32").toString
+    val dir = tmpDir("x32").toString
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     // centroids are vec_id 1..8; make 1 and 2 the query's probed lists and
     // park a PERFECT duplicate of the query (id 20) on centroid 3's list
@@ -78,7 +77,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x34: each prep stage removes exactly the docs it should") {
-    val dir = Files.createTempDirectory("x34").toString
+    val dir = tmpDir("x34").toString
     def md5hex2(s: String): String =
       java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
         .take(1).map("%02x".format(_)).mkString
@@ -291,7 +290,7 @@ class NewOpsSpec extends SparkSpec {
   test("x117: two-source mix — small source upsampled, weights sum to ~1, allocation floors") {
     // source a: 400 tokens, source b: 100 tokens. sqrt ratio 2:1 → weights
     // 2/3, 1/3 vs natural 0.8, 0.2 — b upsampled ~1.67×, a downsampled
-    val dirBase = Files.createTempDirectory("x117").toString
+    val dirBase = tmpDir("x117").toString
     Seq(
       (0L, (1 to 400).map(i => s"a$i").mkString(" "), "en", "src_a"),
       (1L, (1 to 100).map(i => s"b$i").mkString(" "), "en", "src_b"))
@@ -323,7 +322,7 @@ class NewOpsSpec extends SparkSpec {
       (i.toLong, anchor + rnd.nextLong(35L * day / 1000L) * 1000L,
         (rnd.nextInt(5) + 1).toLong, Seq("click", "view")(rnd.nextInt(2)))
     }
-    val dir = Files.createTempDirectory("x110p").toString
+    val dir = tmpDir("x110p").toString
     events.map { case (eid, us, u, ty) =>
       (eid, new java.sql.Timestamp(us / 1000), u, ty, 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -350,7 +349,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x112: Morton codes interleave bits exactly; buckets carry both-dim extents") {
-    val dir = Files.createTempDirectory("x112").toString
+    val dir = tmpDir("x112").toString
     def dayTs(day: Long): java.sql.Timestamp = // epoch day → Timestamp
       new java.sql.Timestamp(day * 86400000L)
     // corner rows (0,0) and (65535,65535) make the range normalization the
@@ -416,7 +415,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x110: fold boundaries — train/embargo/test assignment per fold, beyond-window excluded") {
-    val dir = Files.createTempDirectory("x110").toString
+    val dir = tmpDir("x110").toString
     def ts(day: Int, hour: Int = 0): java.sql.Timestamp = // Jan `day` 2024 UTC
       new java.sql.Timestamp(
         (1704067200L + (day - 1) * 86400L + hour * 3600L) * 1000L)
@@ -455,7 +454,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   private def docsLike(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("docs").toString
+    val dir = tmpDir("docs").toString
     rows.map { case (id, t, l) => (id, t, l, "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -463,7 +462,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x61: latest event by sequence number wins; keep/update/insert all classified") {
-    val dir = Files.createTempDirectory("x61").toString
+    val dir = tmpDir("x61").toString
     Seq((1L, 100.0), (2L, 200.0)).toDF("c_custkey", "c_acctbal")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     // user 2: event 7 outranks event 5 by sequence number; user 3 is new
@@ -479,7 +478,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x61: NULL-valued latest event is still an update; NULL acctbal is not an insert") {
-    val dir = Files.createTempDirectory("x61null").toString
+    val dir = tmpDir("x61null").toString
     // user 1: acctbal legitimately NULL, no delta → keep (NOT insert — the
     // round-6 ADVICE divergence class: classification must come from the
     // join-miss flags, never from a value being NULL)
@@ -499,7 +498,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x30: sample matches an independent MD5 of the id, so it is deterministic") {
-    val dir = Files.createTempDirectory("x30").toString
+    val dir = tmpDir("x30").toString
     val rows = (0L until 200L).map(i =>
       (i, s"text $i", if (i % 2 == 0) "en" else "fr", "s", 10L))
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -517,7 +516,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x31: bigram counts, sub-2-token guard, top-5 cap with bigram tie-break") {
-    val dir = Files.createTempDirectory("x31").toString
+    val dir = tmpDir("x31").toString
     Seq(
       (0L, "a b a b c", "en", "s", 9L),    // bigrams: "a b"x2, "b a", "b c"
       (1L, "single", "en", "s", 6L),       // 1 token → none
@@ -570,7 +569,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x70: consecutive repeats collapse (nulls included), intervals chain, one open row per user") {
-    val dir = Files.createTempDirectory("x70").toString
+    val dir = tmpDir("x70").toString
     // fixture values never repeat consecutively, so the IS DISTINCT FROM
     // collapse and the null-after-null repeat are pinned here
     Seq[(Long, Long, Option[Double])](
@@ -600,7 +599,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x71: every status classified against an independent JVM-side replay of the snapshot rules") {
-    val dir = Files.createTempDirectory("x71").toString
+    val dir = tmpDir("x71").toString
     val docs = (1L to 200L).map(i => (i, s"text body number $i", "en", s"src${i % 3}", 18L + i.toString.length))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -625,7 +624,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x72: vocabulary-weighted pair counts equal a direct token-stream recount") {
-    val dir = Files.createTempDirectory("x72").toString
+    val dir = tmpDir("x72").toString
     Seq(
       (1L, "ab ab b aaa"),  // "b" is sub-2-char → contributes no pair
       (2L, "ab ba")
@@ -663,7 +662,7 @@ class NewOpsSpec extends SparkSpec {
         (i.toLong * 10, (rnd.nextInt(4) + 1).toLong,
           rnd.nextInt(4) match { case 0 => None; case v => Some(v.toDouble) })
       }
-      val dir = Files.createTempDirectory("x70p").toString
+      val dir = tmpDir("x70p").toString
       events.toDF("event_id", "user_id", "value")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
       // independent plain-Scala fold of the same rule set
@@ -694,7 +693,7 @@ class NewOpsSpec extends SparkSpec {
         ((rnd.nextInt(6) + 1).toLong, types(rnd.nextInt(types.length)),
           (rnd.nextInt(40) + 1).toLong * 10)
       }.distinct // duplicate (user, type, ts) rows don't change the funnel but keep the ref simple
-      val dir = Files.createTempDirectory("x74p").toString
+      val dir = tmpDir("x74p").toString
       events.zipWithIndex.map { case ((u, t, ts), i) => (i.toLong, u, t, ts) }
         .toDF("event_id", "user_id", "event_type", "ts")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -722,7 +721,7 @@ class NewOpsSpec extends SparkSpec {
         ((rnd.nextInt(5) + 1).toLong,
           anchor + rnd.nextInt(40).toLong * (week / 7) + rnd.nextInt(1000).toLong)
       }
-      val dir = Files.createTempDirectory("x75p").toString
+      val dir = tmpDir("x75p").toString
       events.zipWithIndex.map { case ((u, ts), i) => (i.toLong, u, "view", ts) }
         .toDF("event_id", "user_id", "event_type", "ts")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -740,7 +739,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x81: 5-min boundary inclusive, 1µs over excluded, equal-ts peers in-frame, earliest peak on ties") {
-    val dir = Files.createTempDirectory("x81").toString
+    val dir = tmpDir("x81").toString
     val m = 60000000000L // one minute in ns (query truncates to µs)
     Seq(
       // user 1: events at 0, 5m (boundary: in-frame with 0), 10m+1µs
@@ -759,7 +758,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x79: low-df terms keep their whole posting list; repeats within a doc post once; head caps at 20") {
-    val dir = Files.createTempDirectory("x79").toString
+    val dir = tmpDir("x79").toString
     // 25 docs all share "common" (head caps at 20 of 25); doc 3 repeats
     // "rare" three times (one posting, not three); numeric-order head
     // (doc 10 sorts after 9, unlike lexicographic)
@@ -777,7 +776,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x74: stages attribute strictly-after only — same-instant and pre-view events don't convert") {
-    val dir = Files.createTempDirectory("x74").toString
+    val dir = tmpDir("x74").toString
     Seq(
       // user 1: full funnel, strictly ordered
       (1L, 1L, "view", 100L), (2L, 1L, "click", 200L), (3L, 1L, "purchase", 300L),
@@ -799,7 +798,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x75: cohort is the FIRST week; week-boundary ns lands in the next week; users dedupe per week") {
-    val dir = Files.createTempDirectory("x75").toString
+    val dir = tmpDir("x75").toString
     val anchor = 1704067200000000000L
     val week   = 604800000000000L
     Seq(
@@ -830,7 +829,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x83: window-distance-4 dup missed, cross-block dup missed, adjacent dup found") {
-    val dir = Files.createTempDirectory("x83").toString
+    val dir = tmpDir("x83").toString
     // 40-char prefixes: block = first 8 chars, sort key = first 40
     val pA = "aaaa bbbb cccc dddd eeee ffff gggg hhhh!" // blockA, 40 chars
     val pB = "zzzz yyyy xxxx wwww vvvv uuuu tttt ssss!" // blockB
@@ -861,7 +860,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x84: every candidate's lev matches a plain-Scala DP; gate splits at rounded 0.95") {
-    val dir = Files.createTempDirectory("x84").toString
+    val dir = tmpDir("x84").toString
     val base = (0 until 30).map(i => s"tok$i").mkString(" ")
     val texts = Map(
       1L -> base,
@@ -895,7 +894,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x85: chi-square equals a plain-Scala fold over x16's scores, zero cells included") {
-    val dir = Files.createTempDirectory("x85").toString
+    val dir = tmpDir("x85").toString
     // srcLow clusters in low bins, srcHigh in high ones → real drift signal;
     // sources are spread over bins the OTHER source never occupies, so the
     // dense grid's zero-observation cells carry real chi-square mass
@@ -931,7 +930,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x86: cross-label in-bucket pairs only; same-label and cross-bucket pairs invisible") {
-    val dir = Files.createTempDirectory("x86").toString
+    val dir = tmpDir("x86").toString
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     Seq(
       (0L, 1, v(1, 1, 1, 1, 1, 1)),      // bucket 63, label 1
@@ -966,7 +965,7 @@ class NewOpsSpec extends SparkSpec {
           }
         base += id -> t
       }
-      val dir = Files.createTempDirectory("x83p").toString
+      val dir = tmpDir("x83p").toString
       docsDf(dir, base.toSeq)
       // plain-Scala SNM: block on first 8 chars, sort by (first 40, id),
       // window 3, exact shingle jaccard at 0.4
@@ -1004,7 +1003,7 @@ class NewOpsSpec extends SparkSpec {
         }
         (i.toLong * 3, (rnd.nextInt(4) + 1).toLong, v)
       }
-      val dir = Files.createTempDirectory("x90p").toString
+      val dir = tmpDir("x90p").toString
       events.toDF("event_id", "user_id", "value")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
       val expected = events
@@ -1028,7 +1027,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x91: both directions, gap ties to backward, same-instant max-id, null edges") {
-    val dir = Files.createTempDirectory("x91").toString
+    val dir = tmpDir("x91").toString
     val us = 1000L // µs in ns (fixture writes ns; query compares at µs)
     Seq(
       // user 1: forward strictly closer (back gap 20µs, fwd gap 10µs)
@@ -1060,7 +1059,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x92: own-change inclusive, null-valued versions carried, repeat staleness") {
-    val dir = Files.createTempDirectory("x92").toString
+    val dir = tmpDir("x92").toString
     Seq(
       // user 1: versions 5.0 | 7.0 | null | 7.0 (e2 repeats, e5 repeats null)
       (1L, 1L, "view", Some(5.0)), (2L, 1L, "click", Some(5.0)),
@@ -1087,7 +1086,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x93: window boundaries at day 6/7, quiet days unreported, stickiness exact") {
-    val dir = Files.createTempDirectory("x93").toString
+    val dir = tmpDir("x93").toString
     val d = 86400000000000L // one day in ns
     Seq( // (event_id, user_id, ts): u1 on days 0+7, u2 on day 0, u3 on days 5+6
       (1L, 1L, 0L * d), (2L, 2L, 0L * d + 1000L), (3L, 3L, 5L * d),
@@ -1104,7 +1103,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x96: step weighting, null obs dropped, single/zero-span excluded, same-ts tie-break") {
-    val dir = Files.createTempDirectory("x96").toString
+    val dir = tmpDir("x96").toString
     Seq( // (event_id, user_id, ts_ns, value)
       // user 1: 10.0 holds 4µs, 20.0 holds 6µs, last obs spans zero
       (1L, 1L, 0L, Some(10.0)), (2L, 1L, 4000L, Some(20.0)), (3L, 1L, 10000L, Some(0.0)),
@@ -1128,7 +1127,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x97: hand-computed medians, even-count interpolation, MAD=0 fence") {
-    val dir = Files.createTempDirectory("x97").toString
+    val dir = tmpDir("x97").toString
     val rows =
       Seq(1.0, 2.0, 3.0, 4.0, 100.0).map(v => ("a", Some(v))) ++
       Seq(1.0, 2.0, 3.0, 10.0).map(v => ("b", Some(v))) ++
@@ -1144,7 +1143,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x94: chunk counts at the 32/33 boundary, overlap slices, content md5") {
-    val dir = Files.createTempDirectory("x94").toString
+    val dir = tmpDir("x94").toString
     def toks(n: Int): String = (1 to n).map(i => s"t$i").mkString(" ")
     docsDf(dir, Seq(1L -> toks(10), 2L -> toks(32), 3L -> toks(33), 4L -> toks(81)))
     val out = LlmQueries.x94RagChunks(spark, dir).collect()
@@ -1164,7 +1163,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x95: dominated dropped, equal-pair tie keeps lowest doc_id, per-source frontiers") {
-    val dir = Files.createTempDirectory("x95").toString
+    val dir = tmpDir("x95").toString
     Seq( // (doc_id, text → richness, lang, source, n_chars — stored, not derived)
       (1L, Some("a b c"), "en", "sA", 10L),       // rich 3 at nc 10: DOMINATED by d5
       (2L, Some("a a b"), "en", "sA", 20L),       // rich 2 at nc 20: dominated by d1
@@ -1181,7 +1180,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x98: checksum matches a plain-Scala sum; any single-row corruption moves it") {
-    val dir = Files.createTempDirectory("x98").toString
+    val dir = tmpDir("x98").toString
     val rows = Seq( // nulls in every coalesced column
       (1L, Some("hello world"), Some("en"), "sA", Some(11L)),
       (2L, None, Some("en"), "sA", Some(0L)),
@@ -1204,7 +1203,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x99: transitions sequence by event_id, per-from normalization, singletons drop") {
-    val dir = Files.createTempDirectory("x99").toString
+    val dir = tmpDir("x99").toString
     Seq( // rows deliberately OUT of event_id order: sequence must come
          // from the window sort, not file order
       (3L, 1L, "A"), (1L, 1L, "A"), (4L, 1L, "B"), (2L, 1L, "B"),
@@ -1223,7 +1222,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x100: orthogonal labels cos 0, scaled copies cos from known geometry") {
-    val dir = Files.createTempDirectory("x100").toString
+    val dir = tmpDir("x100").toString
     def vec(xs: Seq[Float]): Array[Float] = xs.toArray
     Seq( // label 0 sums to (2,0); label 1 to (0,1); label 2 to (3,4)
       (1L, vec(Seq(1f, 0f)), 0), (2L, vec(Seq(1f, 0f)), 0),
@@ -1238,7 +1237,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x101: uniform-2 entropy 1, constant 0, uniform-4 entropy 2; counts exact") {
-    val dir = Files.createTempDirectory("x101").toString
+    val dir = tmpDir("x101").toString
     Seq(
       (1L, Some("a b"), "en", "sA", 3L), (2L, Some("a b"), "en", "sA", 3L),
       (3L, Some("x x x x"), "en", "sB", 7L),
@@ -1255,7 +1254,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x87: add-one bigram probabilities on a hand-computed corpus") {
-    val dir = Files.createTempDirectory("x87").toString
+    val dir = tmpDir("x87").toString
     docsDf(dir, Seq(1L -> "a b a b", 2L -> "a b c", 3L -> "x"))
     // corpus: c(a,b)=3 c(b,a)=1 c(b,c)=1; histories c(a·)=3 c(b·)=2; V=4
     // P(a,b)=(3+1)/(3+4)=4/7  P(b,a)=(1+1)/(2+4)=1/3  P(b,c)=2/6=1/3
@@ -1270,7 +1269,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x102: session boundaries, window edges inclusive, per-window user counts") {
-    val dir = Files.createTempDirectory("x102").toString
+    val dir = tmpDir("x102").toString
     def ns(sec: Long) = sec * 1000000000L
     Seq( // user 1: [0,100s] and [4000s,4000s] (gap 3900s > 1800s);
          // user 2: [50s,310s] (260s gap, one session); user 3: [320s,320s]
@@ -1318,7 +1317,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x105: cross-bucket true neighbors are the recall misses, ranks exact") {
-    val dir = Files.createTempDirectory("x105").toString
+    val dir = tmpDir("x105").toString
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     Seq( // query bucket is 15 (all four lead signs positive)
       (0L, 0, v(1, 1, 1, 1)),    // the query itself: cosine 1, bucket 15
@@ -1342,7 +1341,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x128: unpivot KEEPS null measures (the oracle's UNION ALL semantics, not SQL UNPIVOT's)") {
-    val dir = Files.createTempDirectory("x128").toString
+    val dir = tmpDir("x128").toString
     Seq(
       (1L, 1, Some(5.0), Some(100.0), Some(0.1), Some(0.02)),
       (2L, 1, None, Some(200.0), None, Some(0.04)))
@@ -1355,7 +1354,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x123: bloom-prefiltered result equals the plain exact intersection") {
-    val dir = Files.createTempDirectory("x123").toString
+    val dir = tmpDir("x123").toString
     // doc 10 (bench: %10==0) shares its full 6-token text with doc 11
     // (corpus) → 2 contaminated 5-grams; doc 12 shares no 5-gram; doc 13
     // too short for grams
@@ -1374,7 +1373,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x124: a target-composed doc outscores an anti-target doc; bucket math matches by hand") {
-    val dir = Files.createTempDirectory("x124").toString
+    val dir = tmpDir("x124").toString
     // target (src0) speaks only "a b"; doc 2 repeats the target bigram,
     // doc 3 is pure non-target vocabulary
     Seq(
@@ -1392,7 +1391,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x131: longest shared span exact; 5-token overlap excluded; 8 is inclusive") {
-    val dir = Files.createTempDirectory("x131").toString
+    val dir = tmpDir("x131").toString
     val s = (1 to 8).map(i => s"s$i")    // 8-token span
     val t = (1 to 10).map(i => s"t$i")   // 10-token span
     def doc(toks: Seq[String]) = toks.mkString(" ")
@@ -1420,7 +1419,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x132: add-one bigram cross-entropy matches by hand; no-bigram doc absent") {
-    val dir = Files.createTempDirectory("x132").toString
+    val dir = tmpDir("x132").toString
     Seq(
       (1L, "a b a b", "en", "src0", 7L), // bigrams (a,b)x2 (b,a)x1
       (2L, "a b c", "en", "src0", 5L),   // (a,b) (b,c)
@@ -1446,7 +1445,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x133: E-S priorities match an independent JVM md5/ln; zero/null weights drop") {
-    val dir = Files.createTempDirectory("x133").toString
+    val dir = tmpDir("x133").toString
     val docs = Seq(
       (1L, "t", "en", "srcA", 10L), (2L, "t", "en", "srcA", 200L),
       (3L, "t", "en", "srcA", 30L), (4L, "t", "en", "srcA", 400L),
@@ -1481,7 +1480,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x136: threshold boundary exact — 6 kept, 5 dropped; count desc tie by shingle") {
-    val dir = Files.createTempDirectory("x136").toString
+    val dir = tmpDir("x136").toString
     // "a b c" appears 6 times (boundary: kept), "x y z" 5 times (dropped),
     // "p q r" 7 times (kept, ranks first)
     val docs =
@@ -1520,7 +1519,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x141: a contained-start interval EXTENDS its island — the rule sessionization lacks") {
-    val dir = Files.createTempDirectory("x141").toString
+    val dir = tmpDir("x141").toString
     def d(day: Int) = Timestamp.valueOf(f"2024-01-${day + 1}%02d 00:00:00")
     // transit = linenumber % 7 + 1
     Seq(
@@ -1543,7 +1542,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x143: closed-form EWMA equals the recursive fold by hand; singleton passes through") {
-    val dir = Files.createTempDirectory("x143").toString
+    val dir = tmpDir("x143").toString
     def ts(m: Int) = Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
     Seq(
       (1L, ts(0), 1L, "click", 10.0, "{}"),
@@ -1560,7 +1559,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x144: a perfect 2-per-day line recovers slope 2, intercept 1 exactly") {
-    val dir = Files.createTempDirectory("x144").toString
+    val dir = tmpDir("x144").toString
     def d(day: Int) = Timestamp.valueOf(f"2024-01-${day + 1}%02d 00:00:00")
     Seq(
       (1L, d(0), 1L, "lin", 1.0, "{}"),
@@ -1574,7 +1573,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x145: blocks close at 512; oversize doc forms a singleton over-budget block") {
-    val dir = Files.createTempDirectory("x145").toString
+    val dir = tmpDir("x145").toString
     def toks(n: Int) = Seq.fill(n)("w").mkString(" ")
     Seq(
       (1L, toks(30), "en", "s1", 0L),   // 30+400 = 430 fits
@@ -1593,7 +1592,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x147: in-vocab doc decodes byte-identical; OOV doc flags false with exact unk count") {
-    val dir = Files.createTempDirectory("x147").toString
+    val dir = tmpDir("x147").toString
     // vocab = top-25 by (count desc, token asc): a(2), b(2), then 23 of
     // the 31 count-1 tokens alphabetically -> c, z01..z22; z23..z30 OOV
     val rare = (1 to 30).map(i => f"z$i%02d").mkString(" ")
@@ -1608,7 +1607,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x150: positives and hard negatives match an independent JVM ranking") {
-    val dir = Files.createTempDirectory("x150").toString
+    val dir = tmpDir("x150").toString
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     val vecs: Seq[(Long, Int, Array[Float])] = Seq(
       (0L, 1, v(1, 1, 1, 1)),
@@ -1642,7 +1641,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x148: planted perfect correlations recover exactly +-1 at 6dp") {
-    val dir = Files.createTempDirectory("x148").toString
+    val dir = tmpDir("x148").toString
     // price = 2*quantity (corr +1), discount = -quantity/100 (corr -1)
     (1 to 20).map(i => (i.toLong, 1, i.toDouble, 2.0 * i, -i / 100.0, 0.0, "N", "O",
         Timestamp.valueOf("2024-01-01 00:00:00"), 1L, 1L))
@@ -1784,7 +1783,7 @@ class NewOpsSpec extends SparkSpec {
   test("x164: tricky-but-valid JSON lines never quarantine; the mangle rule exactly does") {
     // texts with quotes, newlines, backslashes, unicode — the payloads that
     // break naive line-oriented JSON handling; all must parse back clean
-    val dir = Files.createTempDirectory("x164t").toString
+    val dir = tmpDir("x164t").toString
     val docs = Seq(
       (5L, "he said \"hi\"\nand left", "en", "web", 21L),
       (1L, "back\\slash and \t tab", "en", "web", 20L),
@@ -1822,7 +1821,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x175: a planted always-together pair outlifts a frequent independent pair") {
-    val dir = Files.createTempDirectory("x175t").toString
+    val dir = tmpDir("x175t").toString
     // 'alpha beta' only ever adjacent (lift = N/c since c_uv=c_u=c_v);
     // 'the the' frequent but independent everywhere
     val docs = (1 to 6).map(i => (i.toLong, "alpha beta", "en", "web", 10L)) ++
@@ -1835,7 +1834,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x177: BM25 length normalization — same tf, shorter doc scores higher") {
-    val dir = Files.createTempDirectory("x177t").toString
+    val dir = tmpDir("x177t").toString
     // q1..q3 have df=2 (the top-3 query terms); z* are df-1 fillers that
     // can never enter the query, so doc 2 differs ONLY in length
     Seq((1L, "q1 q2 q3", "en", "web", 8L),
@@ -1848,7 +1847,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x178: a doc violating only the length rule lands in fail_len alone") {
-    val dir = Files.createTempDirectory("x178t").toString
+    val dir = tmpDir("x178t").toString
     // both docs: 2 stopwords, distinct 5-char words, mean_wl in range,
     // no duplicate tokens, < 500 chars — the short one fails ONLY f_len
     def text(n: Int) = (Seq("the", "a") ++ (0 until n - 2).map(i => f"wd$i%03d"))
@@ -1865,7 +1864,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x179: identity mutation collides in bin 9, k=2 decimation does not collide") {
-    val dir = Files.createTempDirectory("x179t").toString
+    val dir = tmpDir("x179t").toString
     // doc_id 10 → k=1000000 (identity, Jaccard 1.0); doc_id 0 → k=2 (every
     // 2nd token dropped: no 3 consecutive survivors, shingle Jaccard 0)
     def words(tag: String) = (0 until 40).map(i => s"$tag$i").mkString(" ")
@@ -1880,7 +1879,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x180: sample-estimated boundaries bucket the full column, all rows kept") {
-    val dir = Files.createTempDirectory("x180t").toString
+    val dir = tmpDir("x180t").toString
     // sample = orderkey%10==0 → values 10,20,…,100; quantile_cont gives
     // boundaries 19,28,…,91, so bucket 0 holds 1..19 and the rest 9 each
     (1 to 100).map(i => (i.toLong, i.toDouble))
@@ -1895,7 +1894,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x181: bigrams count as new only in their first doc_id decile") {
-    val dir = Files.createTempDirectory("x181t").toString
+    val dir = tmpDir("x181t").toString
     // ids 0..9 → bucket == doc_id; doc 5 repeats 'a b' (seen in bucket 0)
     // and introduces 'b c' / 'c d'
     val filler = (0 until 8).map(i => (i.toLong, s"f$i g$i", "en", "web", 5L))
@@ -1913,7 +1912,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x183: bisection conserves tokens and halts at ≤32-token chunks") {
-    val dir = Files.createTempDirectory("x183t").toString
+    val dir = tmpDir("x183t").toString
     // doc 1: 100 tokens → [1,50]+[51,100] → four 25-token chunks at depth 2
     // doc 2: 20 tokens → already a chunk at depth 0
     def text(n: Int) = (1 to n).map(i => s"t$i").mkString(" ")
@@ -1928,7 +1927,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x184: only urgent orders' line items aggregate; bloom injection self-asserted") {
-    val dir = Files.createTempDirectory("x184t").toString
+    val dir = tmpDir("x184t").toString
     Seq((1L, "1-URGENT"), (2L, "3-MEDIUM"))
       .toDF("o_orderkey", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -1947,7 +1946,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x186: the forecast total equals the materialized self-join's row count") {
-    val dir = Files.createTempDirectory("x186t").toString
+    val dir = tmpDir("x186t").toString
     // users: 10 → 3 events, 20 → 2, 30 → 1  ⇒  Σn² = 9 + 4 + 1 = 14
     val ev = Seq((1L, 10L), (2L, 10L), (3L, 10L), (4L, 20L), (5L, 20L), (6L, 30L))
     ev.map { case (eid, u) =>
@@ -1968,7 +1967,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x187: the SQL-UDF gate counts exactly the docs passing both rules") {
-    val dir = Files.createTempDirectory("x187t").toString
+    val dir = tmpDir("x187t").toString
     // doc 1: 2 stopwords + 20 tokens (passes); doc 2: 2 stopwords but only
     // 10 tokens (fails the length rule alone)
     def text(n: Int) = (Seq("the", "a") ++ (0 until n - 2).map(i => s"w$i"))
@@ -1983,7 +1982,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x188: TVF chunk geometry — full strides plus the short tail, tokens conserved") {
-    val dir = Files.createTempDirectory("x188t").toString
+    val dir = tmpDir("x188t").toString
     def text(n: Int) = (1 to n).map(i => s"t$i").mkString(" ")
     // 100 tokens → 40+40+20 (tail 20, NOT short); 87 → 40+40+7 (short tail)
     Seq((1L, text(100), "en", "web", 100L), (2L, text(87), "en", "web", 87L))
@@ -1995,7 +1994,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x189: the checkpoint's state store holds exactly the grouped aggregate") {
-    val dir = Files.createTempDirectory("x189t").toString
+    val dir = tmpDir("x189t").toString
     val ev = Seq((1L, 10L, 1.25), (2L, 10L, 2.5), (3L, 20L, 0.125))
     ev.map { case (eid, u, v) =>
       (eid, new java.sql.Timestamp(1700000000000L + eid * 1000), u, "click", v, "{}")
@@ -2008,7 +2007,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x190: opt-out rows are physically gone; a fully-opted-out partition vanishes to 0") {
-    val dir = Files.createTempDirectory("x190t").toString
+    val dir = tmpDir("x190t").toString
     // partition (en, tiny): BOTH docs opt out (ids 997, 1994) — dynamic
     // overwrite alone can't empty it, the explicit dir delete must
     val docs = Seq(
@@ -2028,7 +2027,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x182: dynamic overwrite replaces only the en partition, others intact") {
-    val dir = Files.createTempDirectory("x182t").toString
+    val dir = tmpDir("x182t").toString
     Seq((1L, "aa bb", "en", "web", 5L), (2L, "cc dd", "fr", "web", 5L),
       (3L, "ee ff", "fr", "news", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -2045,7 +2044,7 @@ class NewOpsSpec extends SparkSpec {
     // 'hub' touches 10 distinct neighbors; 'rep' repeats just as often but
     // only ever neighbors 'pal' — frequency alone cannot separate them,
     // recursive neighborhood importance must
-    val dir = Files.createTempDirectory("x170t").toString
+    val dir = tmpDir("x170t").toString
     val hubDoc = (1 to 10).map(i => s"hub n$i").mkString(" ")
     val repDoc = Seq.fill(10)("rep pal").mkString(" ")
     Seq((1L, hubDoc, "en", "web", hubDoc.length.toLong),
@@ -2093,7 +2092,7 @@ class NewOpsSpec extends SparkSpec {
   }
 
   test("x168: null text, empty text, and quoted newlines survive the CSV cycle distinctly") {
-    val dir = Files.createTempDirectory("x168t").toString
+    val dir = tmpDir("x168t").toString
     Seq(
       (1L, null.asInstanceOf[String], "en", "web", 0L),
       (2L, "", "en", "web", 0L),

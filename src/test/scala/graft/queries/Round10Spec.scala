@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** Round-10 query semantics the sf fixtures alone don't pin: KMV's exact-
@@ -15,7 +13,7 @@ class Round10Spec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = Files.createTempDirectory("r10").toString
+    val dir = tmpDir("r10").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -125,7 +123,7 @@ class Round10Spec extends SparkSpec {
   }
 
   test("x247: trigram support/occurrence counting on a hand-built stream") {
-    val dir = Files.createTempDirectory("x247").toString
+    val dir = tmpDir("x247").toString
     def ts(i: Int) = new java.sql.Timestamp(1704067200000L + i * 1000L)
     // u1: A B C B C ; u2: A B C ; u3: B C A (null type breaks nothing: filtered)
     val rows = Seq(
@@ -164,7 +162,7 @@ class Round10Spec extends SparkSpec {
   }
 
   test("x249: element-wise mean pooling on a hand-built group") {
-    val dir = Files.createTempDirectory("x249").toString
+    val dir = tmpDir("x249").toString
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     // gid 0: vecs 0..2 (3 chunks); gid 1: vec 10 alone
     Seq((0L, v(1.0, 2.0), "a"), (1L, v(2.0, 4.0), "a"), (2L, v(3.0, 6.0), "a"),
@@ -284,7 +282,7 @@ class Round10Spec extends SparkSpec {
   }
 
   test("x257: truncation recall on a hand-built +/-1 geometry") {
-    val dir = Files.createTempDirectory("x257").toString
+    val dir = tmpDir("x257").toString
     def v(f: Int => Double): Array[Float] =
       (0 until 64).map(i => f(i).toFloat).toArray
     Seq(
@@ -381,7 +379,7 @@ class Round10Spec extends SparkSpec {
   }
 
   test("x264: decay weights equal the closed form at exact month offsets") {
-    val dir = Files.createTempDirectory("x264").toString
+    val dir = tmpDir("x264").toString
     val base = 1704067200000000L // 2024-01-01 UTC epoch-µs
     val month = 2592000000000L // 30 days in µs
     def ts(us: Long) = new java.sql.Timestamp(us / 1000)

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** Round-11 query semantics the sf fixtures alone don't pin: the ESS
@@ -15,7 +13,7 @@ class Round11Spec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = Files.createTempDirectory("r11").toString
+    val dir = tmpDir("r11").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -250,7 +248,7 @@ class Round11Spec extends SparkSpec {
   }
 
   private def custDir(rows: Seq[(Long, String, Int, Double, String)]): String = {
-    val dir = Files.createTempDirectory("r11c").toString
+    val dir = tmpDir("r11c").toString
     rows.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     dir
@@ -292,7 +290,7 @@ class Round11Spec extends SparkSpec {
   }
 
   private def eventsDir(rows: Seq[(Long, Long, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("r11e").toString
+    val dir = tmpDir("r11e").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
@@ -391,7 +389,7 @@ class Round11Spec extends SparkSpec {
   }
 
   private def embDir(rows: Seq[(Long, Array[Float], Int)]): String = {
-    val dir = Files.createTempDirectory("r11v").toString
+    val dir = tmpDir("r11v").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkSpec
@@ -22,7 +21,7 @@ class Round12Spec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = Files.createTempDirectory("r12").toString
+    val dir = tmpDir("r12").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -31,7 +30,7 @@ class Round12Spec extends SparkSpec {
   /** (event_id, day, value) — one event per row at midnight + event_id
     * micros of the given UTC day. */
   private def eventsDir(rows: Seq[(Long, Long, Double)]): String = {
-    val dir = Files.createTempDirectory("r12ev").toString
+    val dir = tmpDir("r12ev").toString
     rows.map { case (id, day, v) =>
       (id, new Timestamp(day * 86400000L + id), 1L, "t", v)
     }.toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -40,7 +39,7 @@ class Round12Spec extends SparkSpec {
   }
 
   private def embDir(rows: Seq[(Long, Seq[Float])]): String = {
-    val dir = Files.createTempDirectory("r12emb").toString
+    val dir = tmpDir("r12emb").toString
     rows.map { case (id, e) => (id, e, 0) }
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

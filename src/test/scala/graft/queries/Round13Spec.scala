@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** Round-13 query semantics the sf fixtures alone don't pin: x348's
@@ -16,14 +14,14 @@ class Round13Spec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = Files.createTempDirectory("r13").toString
+    val dir = tmpDir("r13").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
   }
 
   private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("r13ev").toString
+    val dir = tmpDir("r13ev").toString
     rows.map { case (id, uid, typ, v) =>
       (id, new java.sql.Timestamp(1700000000000L + id), uid, typ, v)
     }.toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -32,7 +30,7 @@ class Round13Spec extends SparkSpec {
   }
 
   private def embDir(rows: Seq[(Long, Seq[Float], Int)]): String = {
-    val dir = Files.createTempDirectory("r13emb").toString
+    val dir = tmpDir("r13emb").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

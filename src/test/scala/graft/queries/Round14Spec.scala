@@ -100,7 +100,7 @@ class Round14Spec extends SparkSpec {
       (0L, s"$en $zh", "s0"),
       (1L, s"$en $en", "s0")
     )).toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("x358_mix").toString
+    val dir = tmpDir("x358_mix").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = Round14Queries.x358CodeSwitch(spark, dir).collect()
     assert(r.length === 1)
@@ -134,7 +134,7 @@ class Round14Spec extends SparkSpec {
       .select(lit(0L).as("doc_id"),
         lit(Seq.fill(1000)("tok").mkString(" ")).as("text"),
         lit("src0").as("source"))
-    val dir = java.nio.file.Files.createTempDirectory("x357_one").toString
+    val dir = tmpDir("x357_one").toString
     one.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = Round14Queries.x357PackContamination(spark, dir)
       .orderBy("w").collect()

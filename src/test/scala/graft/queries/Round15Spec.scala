@@ -87,7 +87,7 @@ class Round15Spec extends SparkSpec {
       (3L, "sC", "m n o k m n o k"),   // prefix == suffix -> self only
       (4L, "sD", "a b c d e f g h"))
     val df = rows.toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("x361spec").toString
+    val dir = tmpDir("x361spec").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Round15Queries.x361FragmentStitch(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
@@ -108,7 +108,7 @@ class Round15Spec extends SparkSpec {
       (3L, "sB", "u v w u v w u v w"),
       (4L, "sB", "m n o k"),
       (5L, "sC", "a b a"))
-    val dir = java.nio.file.Files.createTempDirectory("x362spec").toString
+    val dir = tmpDir("x362spec").toString
     rows.toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Round15Queries.x362RepetitionLoop(spark, dir)
@@ -140,7 +140,7 @@ class Round15Spec extends SparkSpec {
     val rows =
       (0 until 4).map(i => (i.toLong, same, 0)) ++
       (0 until 4).map(i => ((i + 10).toLong, basis(i), 1))
-    val dir = java.nio.file.Files.createTempDirectory("x363spec").toString
+    val dir = tmpDir("x363spec").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = Round15Queries.x363Anisotropy(spark, dir)
@@ -185,7 +185,7 @@ class Round15Spec extends SparkSpec {
       (1L, "sE", "a b c"), (2L, "sE", "d e f"), (3L, "sE", "g h i"),
       (4L, "sS", "a"), (5L, "sS", "b"), (6L, "sS", "c"),
       (7L, "sS", "w w w w w w w"))
-    val dir = java.nio.file.Files.createTempDirectory("x364spec").toString
+    val dir = tmpDir("x364spec").toString
     rows.toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Round15Queries.x364LengthGini(spark, dir)

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Hand-computed oracles for the round-9 statistical/graph audit family
@@ -17,7 +16,7 @@ class StatAuditSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tmpDir(prefix).toString
 
   private def writeLineitem(dir: String, rows: Seq[(Double, Double)]): Unit =
     rows.zipWithIndex

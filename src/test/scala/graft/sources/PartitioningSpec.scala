@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The two layout tools that carry a 100 TB design and that single-file
   * fixtures never exercise: hive-style partitioned writes (scans prune whole
@@ -13,7 +12,7 @@ class PartitioningSpec extends SparkSpec {
   import spark.implicits._
 
   test("partitioned parquet write + predicate → PartitionFilters prune the scan") {
-    val dir = Files.createTempDirectory("part").toString + "/events"
+    val dir = tmpDir("part").toString + "/events"
     Seq((1L, "click", 1.0), (2L, "view", 2.0), (3L, "click", 3.0), (4L, "error", 4.0))
       .toDF("event_id", "event_type", "value")
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
@@ -32,7 +31,7 @@ class PartitioningSpec extends SparkSpec {
   }
 
   test("ORC roundtrip with predicate pushdown — the second columnar format") {
-    val dir = Files.createTempDirectory("orc").toString + "/events"
+    val dir = tmpDir("orc").toString + "/events"
     Seq((1L, "click", 1.5), (2L, "view", 2.5), (3L, "click", 3.5))
       .toDF("event_id", "event_type", "value")
       .write.mode("overwrite").orc(dir)

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.core.Io
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** The DSv2 TSV connector must agree row-for-row with Io.readText, plan
@@ -13,7 +12,7 @@ class TsvDocsSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(n: Int, parts: Int): String = {
-    val dir = Files.createTempDirectory("tsvdocs").toString + "/docs"
+    val dir = tmpDir("tsvdocs").toString + "/docs"
     val df = (1 to n).map(i =>
       (i.toLong, s"text body $i", "en", s"src${i % 3}", i.toLong * 10))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -74,7 +73,7 @@ class TsvDocsSpec extends SparkSpec {
   }
 
   test("pushed IsNotNull on a long column drops malformed lines — SQL null semantics") {
-    val dir = Files.createTempDirectory("tsvpush").toString + "/docs"
+    val dir = tmpDir("tsvpush").toString + "/docs"
     new java.io.File(dir).mkdirs()
     val w = new java.io.PrintWriter(s"$dir/part-00000", "UTF-8")
     w.println("1\ten\tsrc0\t10\tok")
@@ -99,7 +98,7 @@ class TsvDocsSpec extends SparkSpec {
   }
 
   test("V2 write → V2 read roundtrip; commit leaves no .tmp files behind") {
-    val dir = Files.createTempDirectory("tsvw").toString + "/docs"
+    val dir = tmpDir("tsvw").toString + "/docs"
     val df = (1 to 40).map(i =>
       (i.toLong, s"body with\ttab $i", Option.when(i % 7 != 0)("en"),
         s"src${i % 3}", i.toLong))
@@ -118,7 +117,7 @@ class TsvDocsSpec extends SparkSpec {
   }
 
   test("overwrite truncates: old parts are gone, only the new write remains") {
-    val dir = Files.createTempDirectory("tsvow").toString + "/docs"
+    val dir = tmpDir("tsvow").toString + "/docs"
     def w(n: Int) = (1 to n).map(i => (i.toLong, "t", "en", "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars").repartition(2)
     w(30).write.format("graft.sources.TsvDocs").mode("append").save(dir)
@@ -127,7 +126,7 @@ class TsvDocsSpec extends SparkSpec {
   }
 
   test("malformed lines yield nulls, not task failures (the Io.readText contract)") {
-    val dir = Files.createTempDirectory("tsvbad").toString + "/docs"
+    val dir = tmpDir("tsvbad").toString + "/docs"
     new java.io.File(dir).mkdirs()
     val w = new java.io.PrintWriter(s"$dir/part-00000", "UTF-8")
     w.println("1\ten\tsrc0\t10\tgood line")
@@ -161,7 +160,7 @@ class TsvDocsSpec extends SparkSpec {
   }
 
   test("aggregate pushdown skips null values: MIN/MAX/SUM of an all-null group is null") {
-    val dir = Files.createTempDirectory("tsvaggnull").toString + "/docs"
+    val dir = tmpDir("tsvaggnull").toString + "/docs"
     new java.io.File(dir).mkdirs()
     val w = new java.io.PrintWriter(s"$dir/part-00000", "UTF-8")
     w.println("1\ten\tsrc0\t10\ta")

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.queries.LlmQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.Files
 
 /** Streaming drift == batch x85: the merged histogram state over all
   * micro-batches must produce, through the SHARED driftReport, exactly the
@@ -40,7 +39,7 @@ class StreamingDriftSpec extends SparkSpec {
   test("end-to-end stream report equals batch x85 over the union") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, String, String, Long)]
-    val base = Files.createTempDirectory("sdrift").toString
+    val base = tmpDir("sdrift").toString
     val q = StreamingDrift.start(
       input.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       stateDir = s"$base/state", outDir = s"$base/out", checkpointDir = s"$base/ckpt")
@@ -50,7 +49,7 @@ class StreamingDriftSpec extends SparkSpec {
       input.addData(b3: _*); q.processAllAvailable()
     } finally q.stop()
     // batch x85 over the union corpus, via the declared query itself
-    val dir = Files.createTempDirectory("sdrift_union").toString
+    val dir = tmpDir("sdrift_union").toString
     toDocs(b1 ++ b2 ++ b3).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def m(df: DataFrame) = df.as[(String, Long, Double)].collect().toSet
     val streamed = m(spark.read.parquet(s"$base/out/batch=2")

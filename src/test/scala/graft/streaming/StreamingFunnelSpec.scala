@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.queries.ExtendedQueries
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
@@ -51,7 +50,7 @@ class StreamingFunnelSpec extends SparkSpec {
       (6L, "error", 10L), (6L, "view", 20L), (6L, "click", 30L)
     )
     // batch side: x74 over the same rows as a parquet events table
-    val dir = Files.createTempDirectory("sfunnel").toString
+    val dir = tmpDir("sfunnel").toString
     events.zipWithIndex
       .map { case ((u, t, ts), i) => (i.toLong, u, t, ts) }
       .toDF("event_id", "user_id", "event_type", "ts")

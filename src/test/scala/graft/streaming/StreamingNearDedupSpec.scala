@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.queries.LlmQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.Files
 
 /** Incremental near-dedup: micro-batches assigned against the persistent
   * band-bucket state must reproduce, cumulatively, what batch x13 computes
@@ -34,7 +33,7 @@ class StreamingNearDedupSpec extends SparkSpec {
     assert(m(o3) == Seq((4L, 1L, 1), (5L, 0L, 1)))
 
     // cumulative stream output == batch x13 over the union (monotone ids)
-    val dir = Files.createTempDirectory("snd_union").toString
+    val dir = tmpDir("snd_union").toString
     docs(0L -> tT, 1L -> tU, 2L -> tT, 3L -> tV, 4L -> tU, 5L -> tT)
       .selectExpr("doc_id", "text", "'en' AS lang", "'s' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
@@ -51,7 +50,7 @@ class StreamingNearDedupSpec extends SparkSpec {
   test("end-to-end stream: per-batch outputs land idempotently, state versions advance") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val base = Files.createTempDirectory("snd_e2e").toString
+    val base = tmpDir("snd_e2e").toString
     val q = StreamingNearDedup.start(
       input.toDF().toDF("doc_id", "text"),
       stateDir = s"$base/state", outDir = s"$base/out", checkpointDir = s"$base/ckpt")

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 
 /** Streaming DQ gate: conformant micro-batches flow to curated, dirty ones
@@ -20,8 +19,8 @@ class StreamingQualitySpec extends SparkSpec {
   test("gated foreachBatch routes batches by conformity and reports metrics") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Tx]
-    val curated    = Files.createTempDirectory("stream_cur").toString + "/out"
-    val quarantine = Files.createTempDirectory("stream_q").toString + "/out"
+    val curated    = tmpDir("stream_cur").toString + "/out"
+    val quarantine = tmpDir("stream_q").toString + "/out"
     val decisions  = ArrayBuffer.empty[StreamingQuality.BatchDecision]
 
     val q = input.toDF()
