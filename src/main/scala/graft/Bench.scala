@@ -134,10 +134,10 @@ object Bench {
     val x47Field = (if (x47Rounds >= 0) s""","x47_rounds":$x47Rounds""" else "") +
       (if (x47Hits > 0) s""","x47_memo_hits":$x47Hits""" else "")
     // Shared memo BUILD walls as first-class line items (verdict r14 #6):
-    // every FixtureMemo (the only memo: candJaccard, x47, x225-boot,
-    // stream inputs) times its builds, which amortize across consumers but
-    // used to land silently on whichever consumer ran first in bench order
-    // (x62 +1.0 s in r14). Reported
+    // every FixtureMemo (the only memo: candJaccard and x47's components,
+    // each shared by four queries) times its builds, which amortize across
+    // consumers but used to land silently on whichever consumer ran first
+    // in bench order (x62 +1.0 s in r14). Reported
     // seconds are per-process totals — warmup-SF and measured-SF builds
     // both count, which is what makes consumer walls attributable.
     val memoBuilds = graft.core.MemoMeter.snapshot()

@@ -12,6 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Readers for the driver's parquet fixtures (TESTDATA.md).
@@ -97,7 +98,7 @@ object Io {
     * building the next). Each tag belongs to one call site.
     */
   def freshTmpDir(spark: SparkSession, tag: String): String = {
-    val dir = tmpPath(tag)
+    val dir = s"$tmpRoot/${tag}_${System.nanoTime()}"
     Option(lastTmpDir.put(tag, dir)).foreach { old =>
       try {
         val p = new org.apache.hadoop.fs.Path(old)
@@ -110,13 +111,11 @@ object Io {
   private val lastTmpDir =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def tmpPath(tag: String): String = s"$tmpRoot/${tag}_${System.nanoTime()}"
-
-  /** The one per-JVM parent of every [[freshTmpDir]] and
-    * [[writeStreamInput]] dir, `<java.io.tmpdir>/graft_<random>`. A dir is
-    * otherwise deleted only when a later call replaces it, so the last
-    * one per tag would outlive the JVM; a shutdown hook deletes the parent
-    * and everything under it instead.
+  /** The one per-JVM parent of every [[freshTmpDir]] dir,
+    * `<java.io.tmpdir>/graft_<random>`. A dir is otherwise deleted only
+    * when a later call replaces it, so the last one per tag would outlive
+    * the JVM; a shutdown hook deletes the parent and everything under it
+    * instead.
     */
   private lazy val tmpRoot: java.io.File = {
     val root = java.nio.file.Files.createTempDirectory("graft_").toFile
@@ -147,43 +146,54 @@ object Io {
       else s"$n|$maxM|$bytes"
     } catch { case NonFatal(_) => s"nostamp|${System.nanoTime()}" }
 
-  /** Memo of one streaming replay's INPUT dir (verdict r12 #3): the
-    * streaming replay queries write a deterministic projection of a fixture
-    * table to parquet and stream it back under AvailableNow — the bytes are
-    * a pure function of (tag, sfDir, fixture stamp), so rewriting them on
-    * every invocation (warmup + 2–3 bench reps per round, Verify, specs) was
-    * pure fixed cost. Only the INPUT is memoizable: CHECKPOINT dirs stay
-    * fresh per invocation (state reuse across runs would corrupt the
-    * replay — the x121 rule). Eviction deletes the dir; an entry whose dir
-    * has gone is rebuilt.
+  /** Runs one streaming replay to completion and returns its checkpoint
+    * dir (x189 reads its state store from it). The replay queries write a
+    * fixture projection to parquet and stream it back under AvailableNow,
+    * so every replay takes the same steps, decided here:
+    *
+    *   - `input` is written to a fresh `<tag>_in` dir, which replaces the
+    *     tag's previous one. `coalesce(4)` caps the part count for the read
+    *     side: it bounds the per-micro-batch file-task count however wide
+    *     the producing scan is (guide §6: small files hurt twice). Today's
+    *     fixtures are single small files, so the cap is a no-op there.
+    *     File count cannot affect results: every replay is a keyed
+    *     stateful operator.
+    *   - The checkpoint is a fresh `<tag>_ck` dir on every call: state
+    *     reused across runs would corrupt the replay (the x121 rule).
+    *   - 8 state partitions: the count is pinned at the checkpoint's first
+    *     batch, and every micro-batch commits one state store per
+    *     partition, which is fixed cost, not data cost. At real scale
+    *     this is sized to executors. `rocksDb` also selects the RocksDB
+    *     state store, which the `transformWithState` replays need.
+    *   - `query` gets the stream over the input dir and returns its writer
+    *     (sink, output mode, query name); the checkpoint and the trigger
+    *     are added here. When the replay ends or throws, each conf it set
+    *     gets its prior value back, or is unset if the session had not set
+    *     it.
     */
-  def streamInputMemo(tag: String, table: String): FixtureMemo[String] =
-    new FixtureMemo[String](s"stream_input:$tag", table,
-      release = dir => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir)),
-      valid = dir => new java.io.File(dir).isDirectory)
-
-  /** The streaming-input writer every [[streamInputMemo]] build uses: it
-    * writes `df` to a new `<tmpRoot>/<tag>_<nanos>` dir and returns it.
-    * The input is written ONCE per (sfDir, fixture stamp) and
-    * replayed many times, so part count is capped for the READ side —
-    * coalesce(4) bounds the per-micro-batch file-task count however wide
-    * the producing scan is (guide §6: small files hurt twice). r16
-    * adjudication of the r15 `stream_input:x194_in = 3.6 s` memo line
-    * item (verdict #2): the fixture inputs are SINGLE small parquet files,
-    * so the producing frame is 1 partition and this cap is a no-op at
-    * every driver SF — the write itself measures 0.4–0.9 s in a calm
-    * window at any partitioning (spark-shell A/B: raw 0.50/0.56, coalesce4
-    * 0.40, repartition4 0.71/0.89), and the 3.6 s reading was cold-path +
-    * throttle band landing on the build, not file-count cost. Kept as the
-    * shared writer so a future multi-file fixture cannot regress the
-    * replay side. File count cannot affect results: every consumer is a
-    * keyed stateful aggregate (and the suite passes the oracle at both 8-
-    * and 32-core layouts, which differ in scan partitioning).
-    */
-  def writeStreamInput(df: DataFrame, tag: String): String = {
-    val dir = tmpPath(tag)
-    df.coalesce(4).write.mode("overwrite").parquet(dir)
-    dir
+  def replay(input: DataFrame, tag: String, rocksDb: Boolean)(
+      query: DataFrame => DataStreamWriter[_]): String = {
+    val spark = input.sparkSession
+    val inDir = freshTmpDir(spark, s"${tag}_in")
+    input.coalesce(4).write.parquet(inDir)
+    val ckDir = freshTmpDir(spark, s"${tag}_ck")
+    val confs = Seq("spark.sql.shuffle.partitions" -> "8") ++ Option.when(rocksDb)(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val prior = confs.map { case (k, _) =>
+      k -> Option.when(spark.sessionState.conf.contains(k))(spark.conf.get(k))
+    }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try query(spark.readStream.schema(input.schema).parquet(inDir))
+      .option("checkpointLocation", ckDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+    ckDir
   }
 
   /** Events reader — SCHEMA-ADAPTIVE on the physical type of `ts`, because

@@ -2,15 +2,14 @@ package graft.core
 
 /** Wall-clock meter for shared memo BUILDS (verdict r14 #6). Every
   * fixture-derived cache is a [[FixtureMemo]], the only caller of [[time]]:
-  * candJaccard, the x47 component fixpoint, x225's bootstrap aggregate and
-  * the streaming-input dirs amortize across consumers, but their one-time
-  * build cost used to land silently on whichever consumer ran first in
-  * bench order — x62's committed wall moved +1.0 s in r14 purely because
-  * it absorbed the shared candJaccard build. A memo's miss runs under
-  * [[time]] with the memo's name; Bench emits the per-name totals as a
-  * `memo_builds` object in bench_last.json, so per-query walls become
-  * attributable (consumer time = reported wall − its slice of the
-  * itemized shared builds).
+  * candJaccard and the x47 component fixpoint amortize across their
+  * consumers, but their one-time build cost used to land silently on
+  * whichever consumer ran first in bench order — x62's committed wall
+  * moved +1.0 s in r14 purely because it absorbed the shared candJaccard
+  * build. A memo's miss runs under [[time]] with the memo's name; Bench
+  * emits the per-name totals as a `memo_builds` object in bench_last.json,
+  * so per-query walls become attributable (consumer time = reported wall
+  * − its slice of the itemized shared builds).
   *
   * Seconds accumulate PER PROCESS across all invocations (a two-entry memo
   * can rebuild the same memo for warmup-SF and measured-SF entries — both

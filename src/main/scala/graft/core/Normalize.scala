@@ -71,11 +71,4 @@ object Normalize {
     * `try_cast` reproduces coerce-to-null semantics.
     */
   def tryNum(c: Column): Column = c.try_cast("double")
-
-  /** P4 — missing-column synthesis (pipeline.py:140-141,145-146): absent
-    * columns materialize as all-null of the expected type.
-    */
-  def ensureColumn(df: DataFrame, name: String, sqlType: String): DataFrame =
-    if (df.columns.contains(name)) df
-    else df.withColumn(name, lit(null).cast(sqlType))
 }

@@ -74,6 +74,12 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(builds.forall(fileName(_) == "Tuning.scala"), builds)
   }
 
+  test("streaming replays run only through Io.replay") {
+    val replays = hits("Trigger" + ".AvailableNow") ++ hits("stateStore" + ".providerClass")
+    assert(replays.nonEmpty, "Io.replay runs every replay")
+    assert(replays.forall(fileName(_) == "Io.scala"), replays)
+  }
+
   test("catching Throwable is left only to Bench") {
     val catches = hits("case _: Throwable")
     assert(catches.forall(fileName(_) == "Bench.scala"), catches)

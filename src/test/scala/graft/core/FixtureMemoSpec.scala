@@ -108,23 +108,6 @@ class FixtureMemoSpec extends SparkSpec {
     df.unpersist()
   }
 
-  test("stream-input memo: eviction deletes the dir; a deleted dir is rebuilt") {
-    val memo = Io.streamInputMemo("spec_in", "t")
-    val Seq(a, b, c) = Seq.fill(3)(fixture())
-    def input(dir: String) =
-      memo(spark, dir)(Io.writeStreamInput(spark.read.parquet(s"$dir/t.parquet"), "spec_in"))
-    val (da, db) = (input(a), input(b))
-    assert(input(a) == da)
-    val dc = input(c)
-    assert(!new File(db).exists(), "the evicted input dir is deleted")
-    assert(new File(da).isDirectory && new File(dc).isDirectory)
-    org.apache.commons.io.FileUtils.deleteDirectory(new File(dc))
-    val rebuilt = input(c)
-    assert(rebuilt != dc && new File(rebuilt).isDirectory)
-    assert(spark.read.parquet(rebuilt).count() == 3)
-    Seq(da, rebuilt).foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new File(d)))
-  }
-
   test("Io.freshTmpDir deletes its tag's previous dir and keeps other tags'") {
     def made(tag: String): File = {
       val d = new File(Io.freshTmpDir(spark, tag))

@@ -45,12 +45,4 @@ class NormalizeSpec extends SparkSpec {
     assert(applyNorm(Seq("12.5", "-3", "abc", "", "1e3"), c => Normalize.tryNum(c))
       == Seq(12.5, -3.0, null, null, 1000.0))
   }
-
-  test("ensureColumn synthesizes missing column as typed nulls, no-ops otherwise") {
-    val df = Seq(("a", 1.0)).toDF("x", "amount")
-    val added = Normalize.ensureColumn(df, "timestamp", "timestamp")
-    assert(added.columns.contains("timestamp"))
-    assert(added.select("timestamp").collect().head.isNullAt(0))
-    assert(Normalize.ensureColumn(df, "amount", "double") eq df)
-  }
 }

@@ -43,6 +43,9 @@ class PipelineSpec extends SparkSpec {
           exception: Exception): Unit = seen.add((qe, Some(exception)))
     }
     def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == marker)
+    // an earlier test's events still queued on the bus would reach the
+    // listener too (the CLI test's raw_snapshot write, which scans the CSV)
+    ActiveJobs.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       body
@@ -431,6 +434,40 @@ class PipelineSpec extends SparkSpec {
     val e = intercept[AnalysisException](cli(in))
     assert(e.getCondition == "AMBIGUOUS_REFERENCE", e.getMessage)
     assert(cli(in, minPre = 1.01) == 2)
+  }
+
+  /** Runs `header`'s 20 rows through the CLI and checks the renamed-column
+    * outcome: exit 0, no staged row, header-only CSV exports.
+    */
+  private def assertRenamedColumnDropsEveryRow(prefix: String, header: String): Unit = {
+    val rows = (0 until 20).map(i => s"${1700000000L + i},sale,$i.5,a$i,eu,0.1")
+    val (data, curated) = (tmp(s"d_$prefix"), tmp(s"c_$prefix"))
+    assert(PipelineMain.runCli(spark, csvOf(prefix, header, rows), data, curated,
+      0.98, 0.995) == 0)
+    assert(spark.read.parquet(s"$data/stg_transactions").count() == 0)
+    def lines(f: String) = Files.readAllLines(Paths.get(s"$curated/$f"))
+    assert(lines("region_risk_avg.csv") ==
+      java.util.List.of("location_region,avg_risk_score"))
+    assert(lines("top3_recent_sales_by_receiving.csv") ==
+      java.util.List.of("receiving_address,amount,timestamp"))
+  }
+
+  test("hostile: a renamed amount header synthesizes a null amount, exit 0 with no rows") {
+    // `value` is not `amount`: the pre profile has no amount rule and
+    // passes (SURVEY C2); clean synthesizes `amount` as all-null (SURVEY
+    // P4, pipeline.py:145-146) and drops every row, so the post profile
+    // sees 0 rows and passes too
+    assertRenamedColumnDropsEveryRow("pipe_renamed_amount",
+      "timestamp,transaction_type,value,receiving_address,location_region,risk_score")
+  }
+
+  test("hostile: a renamed timestamp header synthesizes a null timestamp, exit 0 with no rows") {
+    // `event_time` is not `timestamp`: nothing is probed and the pre
+    // profile has no timestamp rule, so it passes (SURVEY C2); clean
+    // synthesizes `timestamp` as all-null (SURVEY P4, pipeline.py:140-141)
+    // and drops every row, so the post profile sees 0 rows and passes too
+    assertRenamedColumnDropsEveryRow("pipe_renamed_ts",
+      "event_time,transaction_type,amount,receiving_address,location_region,risk_score")
   }
 
   test("hostile: a Latin-1 location_region decodes with replacement characters, exit 0") {
